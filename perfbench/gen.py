@@ -34,16 +34,30 @@ N_LABELS = 10
 # Serve store and request stream.
 N_GIDS = 400
 N_REQUESTS = 1000
-MALFORMED_EVERY = 50  # one lookup in 50 (2 %) is malformed
-ZIPF_S = 1.1
-SIM_KINDS = ["exact", "ivf", "composed"]
-
-# Ingest micro-batches.
-N_BATCHES = 40
-BATCH_DOCS = 24
-DUP_SHARE, CAP_SHARE, INVALID_SHARE = 0.10, 0.10, 0.08
-CAP = 10
 REFRESH_VECS = 100
+N_BATCHES = 40
+
+# ---- the traffic mix ------------------------------------------------------
+# Set by the benchmark's specification: two closed-loop reader clients
+# (Serve.scala), 1-25 items per bulk lookup (the reference API's
+# MAX_ITEMS_PER_BULK_REQUEST), Zipf-skewed MBIDs, about 2 % malformed
+# lookups, at most CAP submissions per recording (the reference's
+# duplicate cap), and seeded shares of duplicate, over-cap and invalid
+# submissions.
+MAX_ITEMS = 25
+MALFORMED_EVERY = 50  # one lookup in 50 (2 %) is malformed
+CAP = 10
+# UNVERIFIED ASSUMPTIONS. No production traffic log is available, so each
+# value below is a plain choice, not a measurement; README.md lists the
+# metric each one drives.
+LOOKUP_EVERY = 2  # lookups and top-K requests alternate, 1:1
+SIM_KINDS = ["exact", "ivf", "composed"]  # equal shares, in turn
+MAX_QUERY_IDS = 5  # 1-5 query ids per top-K request
+ZIPF_S = 1.0  # the classic Zipf exponent
+NONCANONICAL_SHARE = 0.15  # brace/uppercase ids, which fill mbid_mapping
+BATCH_DOCS = 24
+BATCH_INTERVAL_S = 3.0  # one ingest micro-batch every 3 s, open loop
+DUP_SHARE, CAP_SHARE, INVALID_SHARE = 0.10, 0.10, 0.08
 
 WORDS = ("join hash row batch scan column customer filter small slow merge "
          "order vector line table data agg value key stream window a spark "
@@ -280,13 +294,13 @@ def serve_requests(rng, gids, counts):
     for i in range(N_REQUESTS):
         # fixed schedules for the kind, the request size and which lookups
         # are malformed: seeds vary what is asked, not how much
-        j = i // 2
-        if i % 2 == 0:
-            k = 1 + (j * 7) % 25
+        j = i // LOOKUP_EVERY
+        if i % LOOKUP_EVERY == 0:
+            k = 1 + (j * 7) % MAX_ITEMS
             items = []
             for ix in order[rng.choice(len(gids), k, p=p)]:
                 g = gids[ix]
-                if rng.random() < 0.15:
+                if rng.random() < NONCANONICAL_SHARE:
                     g = "{" + g.replace("-", "").upper() + "}"
                 off = int(rng.integers(0, counts[gids[ix]] + 1))
                 items.append(f"{g}:{off}" if off or rng.random() < 0.5 else g)
@@ -300,8 +314,8 @@ def serve_requests(rng, gids, counts):
             out.append({"kind": "lookup", "param": ";".join(items),
                         "features": fs, "malformed": malformed})
         else:
-            ids = sorted(int(x) for x in rng.choice(N_VECS, 1 + j % 5,
-                                                    replace=False))
+            ids = sorted(int(x) for x in rng.choice(
+                N_VECS, 1 + j % MAX_QUERY_IDS, replace=False))
             out.append({"kind": SIM_KINDS[j % len(SIM_KINDS)], "ids": ids})
     return out
 
@@ -382,6 +396,8 @@ def generate(out, seed, workload):
                 f.write(json.dumps(b, sort_keys=True) + "\n")
         write_embeddings(f"{out}/refresh_vecs.parquet", rng, centers,
                          N_VECS, REFRESH_VECS)
+        with open(f"{out}/traffic.json", "w") as f:
+            json.dump({"batch_interval_s": BATCH_INTERVAL_S}, f)
     elif workload == "analytics":
         manifest = os.path.join(HERE, "analytics_manifest.json")
         shutil.copy(manifest, out)

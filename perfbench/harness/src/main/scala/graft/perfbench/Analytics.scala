@@ -25,10 +25,14 @@ final class Analytics(ctx: Ctx) extends Workload {
   private var failed = 0L
   private var passes = 0
   val MinPasses = 4
+  // one query at a time, so the process-wide checkpoint capture sees only
+  // the traced operation it is opened for
+  ctx.probe.captureSites = true
 
   private def runOne(name: String, collect: Boolean): Option[Double] = {
     val fn = SparkEntry.queries(name)
-    val (ok, ns) = ctx.probe.run(s"query.$name") { op =>
+    // the hash pass runs once: a traced run need not collect twice
+    val (ok, ns) = ctx.probe.run(s"query.$name", paired = !collect) { op =>
       try {
         val df = op.phase("construct")(fn(spark, ctx.dir))
         op.phase("plan")(df.queryExecution.executedPlan)
@@ -53,7 +57,6 @@ final class Analytics(ctx: Ctx) extends Workload {
   def warm(): Unit = {
     order.foreach(q => runOne(q, collect = true))
     order.foreach(q => runOne(q, collect = false))
-    ctx.probe.phases.clear(); ctx.probe.walls.clear()
   }
 
   def timed(): Unit = {
@@ -104,6 +107,7 @@ final class Analytics(ctx: Ctx) extends Workload {
     R.e2e("geomean_ms") = (Util.geomean(medians), "ms")
     R.detail("p50_ms") = (Util.median(all), "ms")
     R.detail("p90_ms") = (Util.quantile(all, 0.9), "ms")
+    R.detail("samples") = (all.size.toDouble, "count")
     R.detail("query_geomean_ms") = (Util.geomean(medians), "ms")
     R.detail("passes") = (passes.toDouble, "count")
     order.sorted.foreach { q =>

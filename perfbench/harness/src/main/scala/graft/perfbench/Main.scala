@@ -77,7 +77,7 @@ object Main {
     System.setProperty("graft.bench.profile", "true")
 
     // ---- set-up (setup_s): session, fact-table layouts, the workload's
-    // artifact builds on the fresh root, the seeded store ----------------
+    // artifact builds on the fresh root, the seeded store, warm-up --------
     val t0 = System.nanoTime()
     val spark = Engine.session(cpus.toString)
     val sessionS = (System.nanoTime() - t0) / 1e9
@@ -94,14 +94,7 @@ object Main {
     if (workload == "serve") SimilarityPack.ensureTunedIndex(spark, dir)
     val storeS = secs(if (workload == "serve") buildStore(spark,
       inputs.resolve("store_docs.jsonl").toString, storePath))
-    val setupS = (System.nanoTime() - t0) / 1e9
-    note(f"setup $setupS%.2f s (session $sessionS%.2f s)")
     val sc = spark.sparkContext
-    val listener = if (traced) {
-      val l = new Listener
-      sc.addSparkListener(l)
-      Some(l)
-    } else None
     val probe = new Probe(sc, traced)
     val ctx = new Ctx(spark, dir, inputs, work, probe, seconds, report)
     ctx.storePath = storePath
@@ -114,14 +107,21 @@ object Main {
     val warmT0 = System.nanoTime()
     w.warm()
     val warmS = (System.nanoTime() - warmT0) / 1e9
-    note(f"warm $warmS%.2f s")
+    val setupS = (System.nanoTime() - t0) / 1e9
+    note(f"setup $setupS%.2f s (session $sessionS%.2f s, warm $warmS%.2f s)")
+    // the measured phase starts from here: nothing warm-up recorded counts
+    probe.reset()
+    Spans.buf.clear()
+    val listener = if (traced) {
+      val l = new Listener
+      sc.addSparkListener(l)
+      Some(l)
+    } else None
     val cpuCal = Util.cpuCalMs()
     val gc0 = Util.gcMillis()
-    if (traced) graft.plans.Checkpointed.startCapture()
     val timedT0 = System.nanoTime()
     w.timed()
     val wallS = (System.nanoTime() - timedT0) / 1e9
-    val sites = if (traced) graft.plans.Checkpointed.stopCapture().size else 0
     val gcMs = Util.gcMillis() - gc0
     listener.foreach(_.drain(sc))
     note(f"timed $wallS%.2f s")
@@ -168,9 +168,7 @@ object Main {
       L("indexstore.artifact_bytes") = (Util.dirBytes(Util.path(
         sys.env.getOrElse("SPARK_GRAFT_INDEX_ROOT", "."))).toDouble, "bytes")
       L("store.build_s") = (storeS, "s")
-      import scala.jdk.CollectionConverters._
-      val ops = math.max(1L, probe.walls.values.asScala
-        .map(_.asScala.count(_._2)).sum.toLong)
+      val ops = math.max(1L, probe.tracedOps.get)
       w.layers()
       val t = listener.get.totals
       def per(v: Double) = v / ops
@@ -189,10 +187,10 @@ object Main {
       L("spark.longest_stage_s") = (t.longestStageMs / 1e3, "s")
       L("spark.failed_tasks") = (t.failedTasks.toDouble, "count")
       L("spark.unattributed_jobs") = (listener.get.unattributedJobs.get.toDouble, "count")
-      L("checkpoint.sites") = (sites.toDouble / ops, "count/op")
+      L("checkpoint.sites") = (probe.sites.get.toDouble / ops, "count/op")
       L("jvm.gc_ms") = (gcMs.toDouble, "ms")
       L("jvm.heap_peak_mb") = (Util.heapPeakMb(), "MB")
-      traceSummary(probe, L)
+      traceSummary(probe, r)
       Util.write(work.resolve("trace.json"), spansJson())
     }
     spark.stop()
@@ -211,9 +209,9 @@ object Main {
   }
 
   /** Residual (operation wall time its phases do not cover) and the
-    * traced/untraced wall-time gap, over all operation kinds. */
-  private def traceSummary(probe: Probe,
-      L: mutable.LinkedHashMap[String, (Double, String)]): Unit = {
+    * tracing overhead (see [[Probe.run]]). */
+  private def traceSummary(probe: Probe, r: Report): Unit = {
+    val L = r.layer
     import scala.jdk.CollectionConverters._
     val all = Spans.buf.asScala.toSeq
     val ops = all.filter(_.name.startsWith("op."))
@@ -224,16 +222,12 @@ object Main {
       .map(s => s.end - s.start).sum).sum.toDouble
     L("trace.residual_share") = (if (opWall > 0) 1 - covered / opWall else 0.0,
       "ratio")
-    val kinds = probe.walls.keySet.asScala.toSeq
-    val ratios = kinds.flatMap { k =>
-      val v = probe.wallValues(k)
-      val on = v.filter(_._2).map(_._1.toDouble)
-      val off = v.filterNot(_._2).map(_._1.toDouble)
-      if (on.nonEmpty && off.nonEmpty)
-        Some(Util.median(on) / Util.median(off)) else None
-    }
-    L("trace.overhead_share") = (if (ratios.isEmpty) 0.0
-      else Util.geomean(ratios) - 1, "ratio")
+    val on = probe.tracedPairs.asScala.toSeq
+    val off = probe.controlPairs.asScala.toSeq
+    L("trace.overhead_share") = (if (on.isEmpty || off.isEmpty) 0.0
+      else Util.median(on) / Util.median(off) - 1, "ratio")
+    r.detail("trace.traced_pairs") = (on.size.toDouble, "count")
+    r.detail("trace.control_pairs") = (off.size.toDouble, "count")
     L("trace.spans") = (all.size.toDouble, "count")
   }
 

@@ -169,47 +169,68 @@ final class Listener extends SparkListener {
 /** Runs operations with their phase split and bookkeeping. */
 final class Probe(sc: SparkContext, val traced: Boolean) {
   private val opIds = new AtomicLong(0)
-  private val perKind =
+  private val pairsPerKind =
     new java.util.concurrent.ConcurrentHashMap[String, AtomicLong]()
-  /** (kind, phase) -> per-operation phase durations in ns. */
+  /** (kind, phase) -> per-operation phase durations in ns, of the
+    * operations that count: all of them in an untraced run, the traced
+    * ones in a traced run. */
   val phases = new java.util.concurrent.ConcurrentHashMap[(String, String),
     ConcurrentLinkedQueue[Long]]()
-  /** kind -> (wall ns, traced?) per operation. */
-  val walls = new java.util.concurrent.ConcurrentHashMap[String,
-    ConcurrentLinkedQueue[(Long, Boolean)]]()
+  /** Traced runs: wall-time ratio first / second of each operation pair
+    * whose first execution is traced, and of each control pair (both
+    * untraced). */
+  val tracedPairs = new ConcurrentLinkedQueue[Double]()
+  val controlPairs = new ConcurrentLinkedQueue[Double]()
+  /** Traced operations run. */
+  val tracedOps = new AtomicLong(0)
+  /** Record `plans.Checkpointed` sites inside traced operations. The
+    * capture is process-wide, so only a workload that runs one operation
+    * at a time may turn it on. */
+  @volatile var captureSites = false
+  /** Checkpoint sites captured inside traced operations. */
+  val sites = new AtomicLong(0)
+
+  /** Forget every figure recorded so far (after warm-up). */
+  def reset(): Unit = {
+    phases.clear(); tracedPairs.clear(); controlPairs.clear()
+    pairsPerKind.clear()
+    tracedOps.set(0); sites.set(0)
+  }
 
   final class Op(val id: Long, val kind: String, val on: Boolean,
       val span: Long) {
+    private val record = on || !traced
     /** Time one phase; the Spark jobs it submits are tagged with it. */
     def phase[T](name: String)(f: => T): T = {
       val sid = if (on) Spans.nextId() else 0L
-      sc.setLocalProperty(Probe.PhaseKey, name)
-      sc.setLocalProperty(Probe.SpanKey, sid.toString)
+      if (on) {
+        sc.setLocalProperty(Probe.PhaseKey, name)
+        sc.setLocalProperty(Probe.SpanKey, sid.toString)
+      }
       val a = Spans.nowNs()
       val t0 = System.nanoTime()
       try f finally {
         val dt = System.nanoTime() - t0
-        if (on) Spans.add(Span(sid, span, id, name, a, a + dt))
-        phases.computeIfAbsent((kind, name), _ => new ConcurrentLinkedQueue)
-          .add(dt)
-        sc.setLocalProperty(Probe.PhaseKey, null)
-        sc.setLocalProperty(Probe.SpanKey, null)
+        if (on) {
+          Spans.add(Span(sid, span, id, name, a, a + dt))
+          sc.setLocalProperty(Probe.PhaseKey, null)
+          sc.setLocalProperty(Probe.SpanKey, null)
+        }
+        if (record) phases.computeIfAbsent((kind, name),
+          _ => new ConcurrentLinkedQueue).add(dt)
       }
     }
   }
 
-  /** Run one operation. In a traced run every other operation of a kind is
-    * left untraced, so the traced/untraced gap (the tracing overhead) is
-    * measured on the same inputs in the same run. Returns the body's
-    * result and the operation's wall time in ns. */
-  def run[T](kind: String)(body: Op => T): (T, Long) = {
+  /** One execution of an operation, traced (`on`: spans, checkpoint
+    * capture, its Spark work attributed by the listener) or not. */
+  private def once[T](kind: String, on: Boolean)(body: Op => T): (T, Long) = {
     val id = opIds.incrementAndGet()
-    val nth = perKind.computeIfAbsent(kind, _ => new AtomicLong(0))
-      .getAndIncrement()
-    val on = traced && (nth % 2 == 1)
     val op = new Op(id, kind, on, if (on) Spans.nextId() else 0L)
     sc.setJobGroup(s"${if (on) "pbT" else "pbU"}-$id", kind,
       interruptOnCancel = false)
+    val capture = on && captureSites
+    if (capture) graft.plans.Checkpointed.startCapture()
     val a = Spans.nowNs()
     val t0 = System.nanoTime()
     try {
@@ -217,11 +238,39 @@ final class Probe(sc: SparkContext, val traced: Boolean) {
       (r, System.nanoTime() - t0)
     } finally {
       val dt = System.nanoTime() - t0
-      if (on) Spans.add(Span(op.span, 0L, id, s"op.$kind", a, a + dt))
-      walls.computeIfAbsent(kind, _ => new ConcurrentLinkedQueue).add((dt, on))
+      if (capture)
+        sites.addAndGet(graft.plans.Checkpointed.stopCapture().size.toLong)
+      if (on) {
+        Spans.add(Span(op.span, 0L, id, s"op.$kind", a, a + dt))
+        tracedOps.incrementAndGet()
+      }
       sc.clearJobGroup()
     }
   }
+
+  /** Run one operation; returns the body's result and the operation's
+    * wall time in ns. In a traced run a `paired` operation runs twice
+    * back to back on the same inputs, and the second, untraced execution
+    * only measures: every other pair of a kind traces its first
+    * execution, the rest are control pairs traced in neither. A repeat
+    * runs faster than a first execution (warm caches), by a factor the
+    * control pairs measure, so the tracing overhead is the traced pairs'
+    * median first/second ratio over the control pairs'. The first
+    * execution's result and wall time are returned, so the traced
+    * executions run where untraced ones would. An operation with side
+    * effects (an ingest batch) is not paired: it runs once, traced. */
+  def run[T](kind: String, paired: Boolean = true)(body: Op => T): (T, Long) =
+    if (!traced) once(kind, on = false)(body)
+    else if (!paired) once(kind, on = true)(body)
+    else {
+      val on = pairsPerKind.computeIfAbsent(kind,
+        _ => new AtomicLong(0)).getAndIncrement() % 2 == 0
+      val first = once(kind, on)(body)
+      val second = once(kind, on = false)(body)
+      (if (on) tracedPairs else controlPairs)
+        .add(first._2.toDouble / math.max(1L, second._2))
+      first
+    }
 
   /** Phase durations of every operation whose kind is `kind` or starts
     * with `kind.`. */
@@ -230,9 +279,6 @@ final class Probe(sc: SparkContext, val traced: Boolean) {
       case ((k, p), v) if p == phase && (k == kind || k.startsWith(kind + "."))
         => v.asScala.toSeq
     }.flatten
-
-  def wallValues(kind: String): Seq[(Long, Boolean)] =
-    Option(walls.get(kind)).map(_.asScala.toSeq).getOrElse(Nil)
 }
 
 object Probe {

@@ -47,6 +47,10 @@ final class Serve(ctx: Ctx) extends Workload {
   private val keptPerKind = new java.util.concurrent.ConcurrentHashMap[String,
     AtomicInteger]()
   private val rejected = new AtomicLong(0)
+  /** Request index -> rejected?, for every lookup served in the timed
+    * phase. */
+  private val lookupRejected =
+    new java.util.concurrent.ConcurrentHashMap[Int, Boolean]()
   private val failed = new AtomicLong(0)
   private var reads = 0L
   private var wallS = 0.0
@@ -119,7 +123,6 @@ final class Serve(ctx: Ctx) extends Workload {
     }
     writer.warm()
     lat.clear(); rejected.set(0); failed.set(0)
-    ctx.probe.phases.clear(); ctx.probe.walls.clear()
   }
 
   def timed(): Unit = {
@@ -134,6 +137,8 @@ final class Serve(ctx: Ctx) extends Workload {
           else {
             val res = serveOne(i)
             val k = requests(i).get("kind").asText
+            if (k == "lookup") res.foreach(r => lookupRejected.put(i,
+              r match { case ("rejected", _) => true; case _ => false }))
             val c = keptPerKind.computeIfAbsent(k, _ => new AtomicInteger(0))
             if (res.isDefined && c.getAndIncrement() < CheckedPerKind)
               kept.put(i, res.get)
@@ -210,6 +215,14 @@ final class Serve(ctx: Ctx) extends Workload {
     R.check("serve.checked_all_kinds", Kinds.forall(k =>
       kept.asScala.exists { case (i, _) => requests(i).get("kind").asText == k }),
       "a request kind went unchecked")
+    // every served lookup: rejected exactly when its request is malformed
+    val wrong = lookupRejected.asScala.toSeq.sortBy(_._1).filter {
+      case (i, rej) => rej != requests(i).get("malformed").asBoolean }
+    R.attempted += lookupRejected.size
+    R.failed += wrong.size
+    R.check("serve.rejections", wrong.isEmpty, s"${wrong.size} of " +
+      s"${lookupRejected.size} lookups rejected when valid or served when " +
+      s"malformed, e.g. request ${wrong.headOption.map(_._1).getOrElse(-1)}")
     recallCheck("ivf", ctx.dir)
     val storeRows = store.count()
     R.attempted += 1
@@ -308,6 +321,7 @@ final class Serve(ctx: Ctx) extends Workload {
     val sm = latencies(sims)
     R.detail("read_p50_ms") = (Util.median(all), "ms")
     R.detail("read_p90_ms") = (Util.quantile(all, 0.9), "ms")
+    R.detail("read_samples") = (all.size.toDouble, "count")
     R.detail("lookup_p50_ms") = (Util.median(lk), "ms")
     R.detail("lookup_p90_ms") = (Util.quantile(lk, 0.9), "ms")
     R.detail("lookup_samples") = (lk.size.toDouble, "count")

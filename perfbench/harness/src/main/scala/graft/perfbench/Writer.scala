@@ -40,7 +40,8 @@ final class Writer(ctx: Ctx) {
   private def ingestOne(idx: Int, timed: Boolean,
       due: Long = System.nanoTime()): Unit = {
     val b = batches(idx)
-    val (ok, _) = ctx.probe.run("ingest_batch") { op =>
+    // an ingest changes the store, so a traced run cannot repeat it
+    val (ok, _) = ctx.probe.run("ingest_batch", paired = false) { op =>
       try {
         // each stage materialized, so its time is its own
         val v = op.phase("validate")(Main.parsed(frame(b, idx))
@@ -72,12 +73,13 @@ final class Writer(ctx: Ctx) {
     ctx.storePath = scratch.toString
     ingestOne(batches.size - 1, timed = false)
     ctx.storePath = real
-    ctx.probe.phases.clear(); ctx.probe.walls.clear()
   }
 
-  /** Seconds between batch submissions: the submitters are independent
-    * of the engine, so the writer runs open-loop at a fixed rate. */
-  val IntervalS = 3.0
+  /** Seconds between batch submissions (an input, see gen.py): the
+    * submitters are independent of the engine, so the writer runs
+    * open-loop at a fixed rate. */
+  private val IntervalS = Util.readJson(ctx.inputs.resolve("traffic.json"))
+    .get("batch_interval_s").asDouble
 
   /** Submit batches on schedule until the deadline. A batch's latency
     * runs from when it was due, so a stall also charges the batches that

@@ -47,6 +47,7 @@ class SeedTest(unittest.TestCase):
                   "refresh_vecs.parquet"):
             self.assertIn(f, a)
             self.assertNotEqual(a[f], c[f], f)
+        self.assertIn("traffic.json", a)
         corpus = [f for f in a if f.startswith("corpus/")]
         self.assertTrue(corpus)
         for f in corpus:
