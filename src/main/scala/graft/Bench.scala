@@ -111,8 +111,8 @@ object Bench {
     // contamination from the bench's self-induced load.
     val loadPre = loadavg()
     val prepT0 = System.nanoTime()
-    // The 36 prepare units ((4 bucketed layouts + partitioned events +
-    // 13 artifact families) x 2 dirs) are mutually independent — each
+    // The prepare units (Tables.prepareUnits' layouts + every artifact
+    // family listed below, for both dirs) are mutually independent — each
     // reads raw parquet and writes its own layout/artifact path, and
     // Tables/IndexStore lock per table/path — so they fan out across a
     // fixed pool instead of paying their SUM serially (r8 recorded

@@ -32,21 +32,22 @@ object QueryStream {
   /** Serve one micro-batch of query vectors (vec_id, embedding float[])
     * with top-k neighbours from the persisted trained-IVF index of the
     * corpus at `dir`: assign each query to its nearest trained centroid
-    * (K-row broadcast), then exact-cosine-rank only that cell's members.
+    * (the K harvested centroids as literals, map-side), then
+    * exact-cosine-rank only that cell's members.
     * Output: (query_id, cell, rank, neighbor_id) — the batch serving
     * contract. */
   def serveBatch(s: SparkSession, dir: String, batch: DataFrame,
       k: Int): DataFrame = {
     val p = SimilarityPack.ensureKmeansIndex(s, dir)
-    val cents = s.read.parquet(s"$p/centroids")
+    val cents = SimilarityPack.harvestCentroids(
+      s.read.parquet(s"$p/centroids"))
     val assign = s.read.parquet(s"$p/assignments")
     val corpus = assign.join(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), asDouble(col("embedding")).as("v")),
       Seq("vec_id"))
-    val q = SimilarityPack.assignCells(
-      batch.select(col("vec_id"), asDouble(col("embedding")).as("v")),
-      cents)
+    val q = batch.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      .withColumn("cell", SimilarityPack.kmeansCell(cents))
     SimilarityPack.cellTopk(corpus, k, _ => q)
   }
 

@@ -188,6 +188,34 @@ class OperatorInvariantsSpec extends SparkSpec {
     assert(joined.map(_.getAs[Long]("h2")).sum > 0)
   }
 
+  test("nearest-centroid kernel: highest score wins, exact ties go to the " +
+    "LOWER cell whatever the listing order") {
+    // the seeded corpora never produce an exact tie, so the rule every ANN
+    // trainer shares is pinned on hand-built centroids
+    import operators.SimilarityPack.{kmeansCell, nearestCell, pqCell}
+    import spark.implicits._
+    val v = Seq(Seq(1.0, 2.0, 0.0)).toDF("v")
+    def cellOf(c: org.apache.spark.sql.Column): Long =
+      v.select(c).head().getLong(0)
+    val c = Seq(1.0, 1.0, 0.0)
+    for (cents <- Seq(Seq(7L -> c, 3L -> c), Seq(3L -> c, 7L -> c)))
+      assert(cellOf(kmeansCell(cents)) == 3L, s"identical centroids $cents")
+    assert(cellOf(kmeansCell(Seq(9L -> c))) == 9L, "single centroid")
+    assert(cellOf(kmeansCell(Seq(3L -> c, 7L -> Seq(1.0, 2.0, 0.0)))) == 7L,
+      "a strictly nearer centroid wins whatever its cell id")
+    assert(cellOf(nearestCell(Seq(5L -> lit(1.0), 2L -> lit(1.0),
+      1L -> lit(0.5))).getField("cell")) == 2L, "tie on the top score")
+    // PQ, subspace 3: x = (1,0,0,0) scores 2·dot − ‖c‖² = 0 against both
+    // (2,0,0,0) and (0,0,0,0) — the lower cell wins whichever code it names
+    val x = Seq((3, Seq(1L, 0L, 0L, 0L))).toDF("s", "x")
+    val (two, zero) = (Seq(2L, 0L, 0L, 0L), Seq(0L, 0L, 0L, 0L))
+    for ((lo, hi) <- Seq((two, zero), (zero, two))) {
+      val book = Map((3, 11L) -> hi, (3, 5L) -> lo, (0, 1L) -> two)
+      assert(x.select(pqCell(book)).head().getLong(0) == 5L,
+        s"PQ tie: cell 5 = $lo, cell 11 = $hi")
+    }
+  }
+
   test("dd_incremental_lsh flags only batch docs against verified corpus matches") {
     import graft.functions.HashFunctions._
     import operators.DedupPack
