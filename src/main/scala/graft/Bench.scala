@@ -226,7 +226,11 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           -1.0
         }
-        val runs = Seq(attempt(), attempt()).filter(_ >= 0)
+        // per-query job group, as Verify sets it: every job the two runs
+        // launch is attributable to this query
+        spark.sparkContext.setJobGroup(name, name)
+        val runs = try Seq(attempt(), attempt()).filter(_ >= 0)
+          finally spark.sparkContext.clearJobGroup()
         name -> (if (runs.isEmpty) -1.0 else runs.min)
       }
       val load1 = loadavg()

@@ -7,11 +7,14 @@ import org.apache.spark.sql.functions._
   * `db/data.py:695-752` + `core.py:284-349` — rows re-nested into
   * `{mbid: {offset: document}}` before jsonify).
   *
-  * The nesting is built WITH Catalyst (`map_from_entries` over sorted
-  * collected structs → `to_json`), not driver-side dict loops: the per-gid
-  * grouping distributes, and only the final ≤25-key bulk map is a single
-  * row. Keys are emitted in sorted order at both levels so the response
-  * bytes are deterministic — same engine answer on any cluster, any run. */
+  * The nesting is built WITH Catalyst, not driver-side dict loops: one
+  * global aggregate collects every (gid, offset, doc) row, and
+  * higher-order functions (`filter`/`transform`/`map_from_entries`) nest
+  * the list by gid in the same expression. The whole response is one
+  * ≤25-key row, so the single aggregate is the whole funnel: the rows
+  * cross one exchange. Keys are emitted in sorted string order at both
+  * levels so the response bytes are deterministic — same engine answer
+  * on any cluster, any run. */
 object Responses {
 
   /** Comparator ordering entry structs by their `key` field alone (the
@@ -25,15 +28,18 @@ object Responses {
     * `{gid: {offset: doc}}`. `doc` may be any struct/map column. */
   def bulkResponse(rows: DataFrame, gid: Column, offset: Column,
       doc: Column): DataFrame = {
-    val perGid = rows
-      .groupBy(gid.as("gid"))
-      .agg(map_from_entries(array_sort(collect_list(
-        struct(offset.cast("string").as("key"), doc.as("value"))), byKey))
-        .as("by_offset"))
-    perGid
-      .agg(map_from_entries(array_sort(collect_list(
-        struct(col("gid").cast("string").as("key"),
-          col("by_offset").as("value"))), byKey)).as("m"))
+    val all = col("all")
+    val byGid = (g: Column) => map_from_entries(array_sort(transform(
+      filter(all, x => x.getField("g") <=> g),
+      x => struct(x.getField("key").as("key"),
+        x.getField("value").as("value"))), byKey))
+    rows
+      .agg(collect_list(struct(gid.as("g"),
+        offset.cast("string").as("key"), doc.as("value"))).as("all"))
+      .select(map_from_entries(array_sort(transform(
+        array_distinct(transform(all, _.getField("g"))),
+        g => struct(g.cast("string").as("key"), byGid(g).as("value"))),
+        byKey)).as("m"))
       // ignoreNullFields=false: a selected-but-absent feature must render
       // as an explicit null (the reference jsonifies Python None), not
       // disappear from the response

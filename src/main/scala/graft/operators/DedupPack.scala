@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sim.IndexStore.member
 import graft.plans.Checkpointed
 
 import graft.Tables
@@ -347,7 +348,7 @@ object DedupPack {
     "dd_component_cap_indexed" -> ((s, d) => {
       val p = PipelinePack.ensureComponentsIndex(s, d)
       capAssign(Tables.documents(s, d),
-        s.read.parquet(s"$p/components"))
+        member(s, p, "components"))
         .orderBy("doc_id")
     }),
 
@@ -417,7 +418,7 @@ object DedupPack {
     // IS what dd_components emits), re-aggregating it in SQL.
     "dd_component_sizes" -> ((s, d) => {
       val p = PipelinePack.ensureComponentsIndex(s, d)
-      s.read.parquet(s"$p/components")
+      member(s, p, "components")
         .groupBy(col("rep")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").as("component_size"))
         .agg(count(lit(1)).as("n_components"))
@@ -748,7 +749,7 @@ object DedupPack {
     * lookup cheap, not the semi join alone). */
   private[graft] def probeBandIndexedAt(s: SparkSession, d: String,
       p: String, batch: DataFrame): DataFrame = {
-    val buckets = s.read.parquet(s"$p/buckets")
+    val buckets = member(s, p, "buckets")
       .filter(size(col("ids")) <= MaxLshBucket)
     val docs = Tables.documents(s, d)
     val cand = bandedKeys(batch)
@@ -1322,7 +1323,7 @@ object DedupPack {
         .filter(col("source") === IncrementalBatchSource))
       .groupBy(col("band"), col("key"))
       .agg(collect_list(col("doc_id")).as("bids"))
-    s.read.parquet(s"$p/buckets")
+    member(s, p, "buckets")
       .join(batchKeys, Seq("band", "key"), "full_outer")
       .select(array_sort(concat(
         coalesce(col("ids"), array().cast("array<bigint>")),

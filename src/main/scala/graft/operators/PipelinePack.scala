@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sim.IndexStore.member
 import graft.Tables
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -585,7 +586,7 @@ object PipelinePack {
     * join). */
   private[graft] def splitServeAt(s: SparkSession, p: String,
       batch: DataFrame): DataFrame =
-    sideAssign(batch, s.read.parquet(s"$p/components"))
+    sideAssign(batch, member(s, p, "components"))
 
   /** Shared CTE chain for the two domain-mix oracles — mirrors
     * [[domainMix]] stage for stage, all-BIGINT (`//` is DuckDB integer

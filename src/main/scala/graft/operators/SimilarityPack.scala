@@ -3,6 +3,7 @@ package graft.operators
 import graft.plans.Checkpointed
 
 import graft.Tables
+import graft.sim.IndexStore.member
 import graft.Exprs.asLong
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -34,7 +35,9 @@ object SimilarityPack {
   // set as an injected selector over the vec_id-keyed corpus rather than a
   // hardwired predicate. The oracle entries instantiate the FIXED default
   // set (ids < 10) — one instantiation of the same code path the
-  // parameterized API serves (equality pinned by QuerySetSpec).
+  // parameterized API serves (equality pinned by QuerySetSpec). A request's
+  // set is a harvest: its ids are read once, when the query is built, and
+  // bind in as literals, so the plan carries no request-side join.
 
   /** Restricts a vec_id-keyed frame to the query rows. */
   private[graft] type QuerySet = DataFrame => DataFrame
@@ -42,12 +45,25 @@ object SimilarityPack {
   /** The oracle-pinned default query set. */
   private[graft] val DefaultQueries: QuerySet = _.filter(col("vec_id") < 10)
 
-  /** Query set from an arbitrary id frame — the bulk-lookup serving shape:
-    * a broadcast left-semi join, so the (small) request list never shuffles
-    * the corpus side. */
-  private[graft] def querySetOf(ids: DataFrame): QuerySet =
-    df => df.join(broadcast(ids.select(col("vec_id")).distinct()),
-      Seq("vec_id"), "left_semi")
+  /** Most rows a [[querySetOf]] id frame may hold. The bulk API caps a
+    * request at 25 items (BulkParams); streaming micro-batches pass whole
+    * batches, so the bound sits well above that cap. */
+  private[graft] val QuerySetMax = 1024
+
+  /** Query set from an arbitrary id frame — the bulk-lookup serving shape.
+    * The frame is read once, here, through a bounded collect of at most
+    * [[QuerySetMax]] rows (a larger frame fails), and its distinct non-null
+    * ids bind in as a `vec_id IN (…)` filter: map-side, no shuffle, no
+    * broadcast, and over the bucketed embeddings it prunes the filtered
+    * scan to the ids' buckets. Null and duplicate ids select nothing
+    * extra, as in a semi join. */
+  private[graft] def querySetOf(ids: DataFrame): QuerySet = {
+    val got = ids.select(col("vec_id")).limit(QuerySetMax + 1).collect()
+    require(got.length <= QuerySetMax, "query set frame holds more than " +
+      s"QuerySetMax = $QuerySetMax rows")
+    val vs = got.filterNot(_.isNullAt(0)).map(_.get(0)).distinct.toSeq
+    _.filter(col("vec_id").isin(vs: _*))
+  }
 
   /** Bulk exact top-K for an arbitrary query-id frame (reference N4's bulk
     * contract with caller-chosen ids). `ids` needs a `vec_id` column —
@@ -211,7 +227,7 @@ object SimilarityPack {
             statsInline.coalesce(1).write.mode("overwrite")
               .parquet(s"$tmp/stats")
           }
-          s.read.parquet(s"$p/stats")
+          member(s, p, "stats")
         case None => statsInline
       }
       ex.join(broadcast(wm), col("vec_id") > col("wm"))
@@ -442,7 +458,7 @@ object SimilarityPack {
       val p = ensureKmeansIndex(s, d)
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      val a1 = s.read.parquet(s"$p/assignments")
+      val a1 = member(s, p, "assignments")
         .join(emb, Seq("vec_id"))
         .select(col("vec_id"), col("v"), col("cell"))
         .withColumn("nrm", l2Norm(col("v")))
@@ -479,7 +495,7 @@ object SimilarityPack {
     "ann_lsh_indexed" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      val keyed = s.read.parquet(s"${ensureLshIndex(s, d)}/buckets")
+      val keyed = member(s, ensureLshIndex(s, d), "buckets")
       lshTablesRank(emb, keyed)
     }),
 
@@ -517,7 +533,7 @@ object SimilarityPack {
     //      build half; queries load its saved centroids/assignments -------
     "ann_kmeans_indexed" -> ((s, d) => {
       val p = ensureKmeansIndex(s, d)
-      val assign = s.read.parquet(s"$p/assignments")
+      val assign = member(s, p, "assignments")
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       cellTopk(assign.join(emb, Seq("vec_id")), k = 5)
@@ -550,14 +566,11 @@ object SimilarityPack {
     // the approximate-family anchors; `hits_ivfpq` measures the composed
     // IVFADC serving index.
     "ann_recall" -> ((s, d) => {
-      // r18: the seeded 25-id sample materializes ONCE. TakeOrdered is an
-      // operator, not an Exchange, so reuse never applied to it — without
-      // this pin every qs() application (the exact anchor plus 2-3 sites
-      // per variant pipeline ≈ 15 in the assembled plan) re-ran the md5
-      // sort over the corpus inside its own broadcast job.
-      val qids = Checkpointed("SimilarityPack.recall.qids",
-        sampledQueryIds(s, d))
-      val qset: QuerySet = querySetOf(qids)
+      // the seeded 25-id sample is harvested ONCE: querySetOf reads it at
+      // construction, so the md5 sort over the corpus runs in one job and
+      // every qs() application (the exact anchor plus 2-3 sites per
+      // variant pipeline) binds the same literal ids
+      val qset: QuerySet = querySetOf(sampledQueryIds(s, d))
       // The exact top-10 (a full corpus scan + window) anchors all the
       // hit joins below — checkpointing materializes it once instead of
       // recomputing it per variant (same discipline as the monitor a
@@ -587,10 +600,10 @@ object SimilarityPack {
       val variants = Seq(
         // multi-table LSH served from the persisted bucket rows
         "hits_tables" -> lshTablesRank(emb,
-          s.read.parquet(s"${ensureLshIndex(s, d)}/buckets"), qset),
+          member(s, ensureLshIndex(s, d), "buckets"), qset),
         // one-Lloyd IVF served from the persisted assignments
         "hits_kmeans" -> cellTopk(
-          s.read.parquet(s"${ensureKmeansIndex(s, d)}/assignments")
+          member(s, ensureKmeansIndex(s, d), "assignments")
             .join(emb, Seq("vec_id")), k = 10, qset),
         "hits_ivf_tuned" -> ivfTunedServe(s, d, qset),
         "hits_pq" -> pqServe(s, d, qset),
@@ -981,9 +994,9 @@ object SimilarityPack {
     // as the reference index returns n_neighbours items (fewer only when
     // the candidate pool runs out)
     val scored = tunedRankScoredFor(
-      s.read.parquet(s"$p/assignments"),
-      s.read.parquet(s"$p/centroids"),
-      querySetOf(ids)(s.read.parquet(s"$p/assignments"))
+      member(s, p, "assignments"),
+      member(s, p, "centroids"),
+      querySetOf(ids)(member(s, p, "assignments"))
         .select(col("vec_id").as("query_id"), col("iv").as("qiv"),
           col("nrm").as("qnrm")),
       kCap = prm.nNeighbours)
@@ -1199,8 +1212,8 @@ object SimilarityPack {
   private def pqServe(s: SparkSession, d: String,
       qs: QuerySet = DefaultQueries): DataFrame = {
     val p = ensurePqIndex(s, d)
-    pqRank(s.read.parquet(s"$p/codebooks"),
-      s.read.parquet(s"$p/codes"), s.read.parquet(s"$p/vectors"),
+    pqRank(member(s, p, "codebooks"),
+      member(s, p, "codes"), member(s, p, "vectors"),
       PqShortlist, qs)
   }
 
@@ -1382,14 +1395,14 @@ object SimilarityPack {
   private def sq8Serve(s: SparkSession, d: String,
       qs: QuerySet = DefaultQueries): DataFrame = {
     val p = ensureSq8Index(s, d)
-    val stats = s.read.parquet(s"$p/stats")
-    val vecs = s.read.parquet(s"$p/vectors")
-    val xh = s.read.parquet(s"$p/codes")
+    val stats = member(s, p, "stats")
+    val vecs = member(s, p, "vectors")
+    val xh = member(s, p, "codes")
       .join(broadcast(stats), Seq("pos"))
       .select(col("vec_id"), col("pos"),
         (lit(255L) * col("mn") + col("q8").cast(LongType) * col("span"))
           .as("xh"))
-    sq8Rank(xh, s.read.parquet(s"$p/norms"), sq8Exploded(vecs), vecs, qs)
+    sq8Rank(xh, member(s, p, "norms"), sq8Exploded(vecs), vecs, qs)
   }
 
   // ---- IVF-PQ (IVFADC): the composed 100 TB serving shape ------------------
@@ -1459,8 +1472,7 @@ object SimilarityPack {
     val cn = pqCent.groupBy(col("s"), col("code"))
       .agg(sum(col("civ") * col("civ")).as("cc"))
     // restrict BEFORE exploding: only the query rows pay the subspace
-    // explode (a pushed-down filter for the default set; an explicit
-    // prune for semi-join query sets, which don't push through Generate)
+    // explode (the query set's filter then reaches the scan directly)
     val lut = pqExplode(qs(assign)).join(broadcast(pqCent), Seq("s", "pos"))
       .groupBy(col("vec_id").as("query_id"), col("s"), col("code"))
       .agg(sum(col("giv") * col("civ")).as("qdot"))
@@ -1518,10 +1530,10 @@ object SimilarityPack {
   private def ivfPqServe(s: SparkSession, d: String,
       qs: QuerySet = DefaultQueries): DataFrame = {
     val p = ensureIvfPqIndex(s, d)
-    ivfPqRank(s.read.parquet(s"$p/centroids"),
-      s.read.parquet(s"$p/assignments"),
-      s.read.parquet(s"$p/codebooks"),
-      s.read.parquet(s"$p/codes"), qs)
+    ivfPqRank(member(s, p, "centroids"),
+      member(s, p, "assignments"),
+      member(s, p, "codebooks"),
+      member(s, p, "codes"), qs)
   }
 
   /** Persisted tuned-IVF index: the six Lloyd iterations are the expensive
@@ -1551,8 +1563,8 @@ object SimilarityPack {
   private def ivfTunedServe(s: SparkSession, d: String,
       qs: QuerySet = DefaultQueries): DataFrame = {
     val p = ensureTunedIndex(s, d)
-    tunedRank(s.read.parquet(s"$p/assignments"),
-      s.read.parquet(s"$p/centroids"), qs)
+    tunedRank(member(s, p, "assignments"),
+      member(s, p, "centroids"), qs)
   }
 
   /** Serve arbitrary (possibly unseen) query VECTORS from the persisted
@@ -1568,8 +1580,8 @@ object SimilarityPack {
     val q = batch
       .select(col("vec_id").as("query_id"), gridVec(col("embedding")).as("qiv"))
       .withColumn("qnrm", sqrt(gridDot(col("qiv"), col("qiv"))))
-    tunedRankFor(s.read.parquet(s"$p/assignments"),
-      s.read.parquet(s"$p/centroids"), q)
+    tunedRankFor(member(s, p, "assignments"),
+      member(s, p, "centroids"), q)
   }
 
   // ---- clustered-corpus pruning proof (`ann_clustered_recall`) -----------

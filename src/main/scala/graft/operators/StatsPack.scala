@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sim.IndexStore.member
 import graft.plans.Checkpointed
 
 import graft.Exprs._
@@ -232,7 +233,7 @@ object StatsPack {
     // incremental-equals-batch is the whole contract. The fresh branch's
     // cumulative window spans only the catch-up horizon (≤ 7 day rows).
     "t1_incremental" -> ((s, d) => {
-      val ledger = s.read.parquet(s"${ensureStatsLedger(s, d)}/daily")
+      val ledger = member(s, ensureStatsLedger(s, d), "daily")
       val (wmOpt, seed) = ledgerHead(ledger)
       val freshSrc = wmOpt match {
         case Some(wm) => Tables.eventsPartitioned(s, d)

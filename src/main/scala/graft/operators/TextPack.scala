@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sim.IndexStore.member
 import graft.plans.Checkpointed
 
 import graft.Tables
@@ -268,8 +269,8 @@ object TextPack {
     // re-aggregating lm1 per call would be a full member scan per
     // micro-batch just to recompute a constant
     bigramScoreSmoothed(bigramTf(docs),
-      s.read.parquet(s"$p/lm2"), s.read.parquet(s"$p/lm1"),
-      s.read.parquet(s"$p/total"), prefilter)
+      member(s, p, "lm2"), member(s, p, "lm1"),
+      member(s, p, "total"), prefilter)
 
   /** Build constants of [[ensureBigramLmIndex]] — members=v2: the total
     * member carries (n, vsz) so serving never re-derives the vocabulary
@@ -322,8 +323,8 @@ object TextPack {
   private[graft] def pplServe(s: SparkSession, d: String,
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val p = ensureLmIndex(s, d)
-    pplScore(docTf(docs), s.read.parquet(s"$p/lm"),
-      s.read.parquet(s"$p/total"))
+    pplScore(docTf(docs), member(s, p, "lm"),
+      member(s, p, "total"))
   }
 
   /** Smoothed artifact-served scoring — the streaming ppl gate's core
@@ -342,8 +343,8 @@ object TextPack {
     * the member joins. */
   private[graft] def pplServeSmoothedAt(s: SparkSession, p: String,
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val lm = s.read.parquet(s"$p/lm")
-    pplScoreSmoothed(docTf(docs), lm, s.read.parquet(s"$p/total"),
+    val lm = member(s, p, "lm")
+    pplScoreSmoothed(docTf(docs), lm, member(s, p, "total"),
       lm.agg(count(lit(1)).as("v")))
   }
 
@@ -377,8 +378,8 @@ object TextPack {
   /** Path-resolved drift serving (see [[pplServeSmoothedAt]]). */
   private[graft] def driftServeAt(s: SparkSession, p: String,
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val lm = s.read.parquet(s"$p/lm")
-    val total = s.read.parquet(s"$p/total")
+    val lm = member(s, p, "lm")
+    val total = member(s, p, "total")
     val bt = docs.select(explode(tokens(col("text"))).as("tk"))
       .groupBy(col("tk")).agg(count(lit(1)).as("cs"))
     val ns = bt.agg(sum(col("cs")).as("ns"))
@@ -689,7 +690,7 @@ object TextPack {
     * literal list (see [[pplServeSmoothedAt]] for the posture). */
   private[graft] def bpeMergesAt(s: SparkSession,
       p: String): Seq[(String, String)] =
-    s.read.parquet(s"$p/merges")
+    member(s, p, "merges")
       .orderBy("merge_idx").collect()
       .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs"))).toSeq
 
@@ -754,8 +755,8 @@ object TextPack {
     * counts plus the vocab-sized df join. */
   private[graft] def bm25ServeAt(s: SparkSession, p: String,
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    bm25RankFromTf(docTf(docs), s.read.parquet(s"$p/df"),
-      s.read.parquet(s"$p/nd"))
+    bm25RankFromTf(docTf(docs), member(s, p, "df"),
+      member(s, p, "nd"))
 
   /** Boilerplate df floor denominator: a shingle is boilerplate within its
     * source when `BoilerDfDen · df >= n_docs(source)` (≥ 10% of the
@@ -1070,8 +1071,8 @@ object TextPack {
     "tx_bigram_ppl_indexed" -> ((s, d) => {
       val p = ensureBigramLmIndex(s, d)
       bigramScore(bigramTf(Tables.documents(s, d)),
-        s.read.parquet(s"$p/lm2"), s.read.parquet(s"$p/lm1"),
-        s.read.parquet(s"$p/total"))
+        member(s, p, "lm2"), member(s, p, "lm1"),
+        member(s, p, "total"))
         .orderBy("doc_id")
     }),
 

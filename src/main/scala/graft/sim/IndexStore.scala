@@ -22,6 +22,13 @@ import org.apache.spark.sql.functions._
   * version — an ingest ledger head (io.Dump), a table snapshot id — can
   * stamp that into the manifest instead, making the freshness check O(1)
   * with the same rebuild semantics.
+  *
+  * Member reads: serve paths read members through [[member]], never with a
+  * bare `read.parquet`. Parquet schema inference is a Spark job of its
+  * own, so each member's schema is resolved once per committed artifact
+  * and every later read binds it (`read.schema(…)`); a warm serve path
+  * then reads its members without launching a job. The schema memo for a
+  * path is dropped on every commit and wherever the freshness memo is.
   */
 object IndexStore {
 
@@ -128,6 +135,7 @@ object IndexStore {
     * scanned-fallback behavior from a known-cold state. */
   private[graft] def resetFingerprintMemo(): Unit = {
     fpMemo.synchronized { fpMemo.clear() }; freshMemo.clear()
+    schemaMemo.clear()
   }
 
   /** Last stamp this session RESOLVED per artifact path — the freshness
@@ -141,6 +149,32 @@ object IndexStore {
     * (the same per-job pricing as the fingerprint memo above). */
   private val freshMemo = new java.util.concurrent.ConcurrentHashMap[
     String, ((Long, Long, Long), Long)]()
+
+  /** Resolved parquet schema per member path (`<artifact>/<member>`). */
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, org.apache.spark.sql.types.StructType]()
+
+  /** Drop this session's freshness stamp and member schemas for the
+    * artifact at `p`: the next construction re-proves the artifact and
+    * re-resolves its members. */
+  private def forget(p: String): Unit = {
+    freshMemo.remove(p)
+    schemaMemo.keySet.removeIf(_.startsWith(s"$p/"))
+  }
+
+  /** Member `name` of the committed artifact at `p` (a path [[ensure]] or
+    * [[ensureVersioned]] returned), read with its memoized schema. The
+    * first read after a commit resolves the schema — one inference job —
+    * and later reads bind it, so they plan without a Spark job. */
+  def member(s: SparkSession, p: String, name: String): DataFrame = {
+    val m = s"$p/$name"
+    val schema = Option(schemaMemo.get(m)).getOrElse {
+      val inferred = s.read.parquet(m).schema
+      schemaMemo.put(m, inferred)
+      inferred
+    }
+    s.read.schema(schema).parquet(m)
+  }
 
   /** Stable hash of a builder's PARAMETER string (md5 head, so it does not
     * depend on JVM hashCode stability). The corpus fingerprint only covers
@@ -383,7 +417,7 @@ object IndexStore {
     try {
       val stale = fs.globStatus(new org.apache.hadoop.fs.Path(s"$p.build-*"))
       if (stale != null && stale.nonEmpty) {
-        freshMemo.remove(p)
+        forget(p)
         val now = System.currentTimeMillis
         stale.foreach { st =>
           val live = fs.exists(
@@ -413,10 +447,11 @@ object IndexStore {
           renamed = fs.rename(tmp, target)
         }
       }
-      // a refused rename or a swept-out sentinel both mean a concurrent
-      // writer raced this commit — invalidate the session freshness memo
-      // for the path so the next construction re-proves (ADVICE r17)
-      if (!renamed) freshMemo.remove(p)
+      // a committed artifact has new member files; a refused rename or a
+      // swept-out sentinel both mean a concurrent writer raced this
+      // commit. Either way the next construction re-proves the path and
+      // re-resolves its members (ADVICE r17)
+      forget(p)
       renamed
     } finally if (!renamed && !built) fs.delete(tmp, true)
   }
@@ -441,6 +476,7 @@ object IndexStore {
       val fp = (version, -1L, -1L)
       val ph = paramsHash(params)
       if (freshMemo.get(p) != ((fp, ph))) {
+        forget(p)
         if (!isFresh(s, p, fp, ph)) {
           val committed = commitBuild(s, p) { tmp =>
             buildsRun.incrementAndGet()
@@ -477,6 +513,7 @@ object IndexStore {
       val fp = fingerprint(corpus, idCol)
       val ph = paramsHash(params)
       if (freshMemo.get(p) != ((fp, ph))) {
+        forget(p)
         if (!isFresh(s, p, fp, ph)) {
           val committed = commitBuild(s, p) { tmp =>
             buildsRun.incrementAndGet()

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sim.IndexStore.member
 import graft.functions.TextFunctions._
 import graft.operators.PipelinePack
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -361,7 +362,7 @@ object DocStream {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
     val p = graft.operators.PipelinePack.ensureComponentsIndex(spark, dir)
-    val labels = spark.read.parquet(s"$p/components")
+    val labels = member(spark, p, "components")
     val tagged = docs.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
     // State discipline: the label member only holds docs that had a

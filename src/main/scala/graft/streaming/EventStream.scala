@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sim.IndexStore.member
 import graft.plans.Checkpointed
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -236,7 +237,7 @@ object EventStream {
   def ledgerCatchupGate(spark: SparkSession, dir: String)
       : DataFrame => DataFrame = {
     val p = graft.operators.StatsPack.ensureStatsLedger(spark, dir)
-    val ledger = spark.read.parquet(s"$p/daily")
+    val ledger = member(spark, p, "daily")
     val (wmOpt, seed) = graft.operators.StatsPack.ledgerHead(ledger)
     batch => {
       val fresh = wmOpt match {

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sim.IndexStore.member
 import graft.Tables
 import graft.functions.VectorFunctions._
 import graft.operators.SimilarityPack
@@ -40,8 +41,8 @@ object QueryStream {
       k: Int): DataFrame = {
     val p = SimilarityPack.ensureKmeansIndex(s, dir)
     val cents = SimilarityPack.harvestCentroids(
-      s.read.parquet(s"$p/centroids"))
-    val assign = s.read.parquet(s"$p/assignments")
+      member(s, p, "centroids"))
+    val assign = member(s, p, "assignments")
     val corpus = assign.join(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), asDouble(col("embedding")).as("v")),

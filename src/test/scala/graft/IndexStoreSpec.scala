@@ -474,4 +474,75 @@ class IndexStoreSpec extends SparkSpec {
     assert(rebuilt, "ensure served an artifact with a torn manifest")
     assert(IndexStore.isFresh(spark, p, fp, ph))
   }
+
+  test("a warm artifact serves with zero Spark jobs at construction: " +
+    "harvested ids, memoized member schemas") {
+    import spark.implicits._
+    import operators.SimilarityPack
+    val sc = spark.sparkContext
+    val p = SimilarityPack.ensureTunedIndex(spark, sfTiny)
+    def build(): Unit = {
+      val ids = Seq(3L, 17L, 42L).toDF("vec_id")
+      SimilarityPack.indexedTopkFor(spark, sfTiny, ids)
+      SimilarityPack.ivfPqTopkFor(spark, sfTiny, ids)
+      SimilarityPack.composedServeAt(spark, p, ids,
+        SimilarityPack.ComposedDefaultParams)
+      ()
+    }
+    build() // warm: resolves the artifacts and their member schemas
+    // jobs are counted by job group (thread-local, so other threads'
+    // jobs never count); a sentinel job in its own group marks the end,
+    // and listener events arrive in order, so once it is seen every
+    // earlier job start has been counted
+    val group = s"warm-probe-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .foreach { g =>
+            if (g == group) jobs.incrementAndGet()
+            else if (g == s"$group-end") seen.countDown()
+          }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try build() finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() == 0,
+      s"building warm serve frames launched ${jobs.get()} Spark jobs")
+  }
+
+  test("a rebuild on a changed corpus re-resolves member schemas: reads " +
+    "serve the new artifact, never a stale memo") {
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, sfTiny)
+    val params = s"schema=${System.nanoTime()}"
+    val name = "schema_memo_probe"
+    val small = emb.filter($"vec_id" < 100)
+    val p1 = IndexStore.ensure(spark, sfTiny, name, small, "vec_id",
+      params) { q =>
+      Seq(("v1", 1L)).toDF("tag", "v")
+        .coalesce(1).write.mode("overwrite").parquet(s"$q/member")
+    }
+    assert(IndexStore.member(spark, p1, "member").as[(String, Long)]
+      .collect().toSeq == Seq(("v1", 1L)))
+    // the corpus changes: the gate rebuilds at the SAME path, and the new
+    // member has a different schema
+    val p2 = IndexStore.ensure(spark, sfTiny, name, emb, "vec_id",
+      params) { q =>
+      Seq(("v2", 2L, 2.5)).toDF("tag", "v", "w")
+        .coalesce(1).write.mode("overwrite").parquet(s"$q/member")
+    }
+    assert(p2 == p1)
+    val served = IndexStore.member(spark, p2, "member")
+    assert(served.columns.toSeq == Seq("tag", "v", "w"))
+    assert(served.as[(String, Long, Double)].collect().toSeq ==
+      Seq(("v2", 2L, 2.5)))
+  }
 }

@@ -113,4 +113,53 @@ class QuerySetSpec extends SparkSpec {
     // and a query id never appears among its own neighbours
     assert(out.filter(col("query_id") === col("neighbor_id")).count() == 0)
   }
+
+  /** The left-semi-join form the harvested query set replaced. */
+  private def semiJoinOf(ids: org.apache.spark.sql.DataFrame)
+      : SimilarityPack.QuerySet =
+    _.join(broadcast(ids.select(col("vec_id")).distinct()), Seq("vec_id"),
+      "left_semi")
+
+  test("the harvested query set selects the semi-join rows: duplicate " +
+    "ids, a null id, an empty frame") {
+    val corpus = Tables.embeddings(spark, sfTiny).select("vec_id", "label")
+    def rows(qs: SimilarityPack.QuerySet) =
+      qs(corpus).orderBy("vec_id").collect().map(_.toString).toSeq
+    val dups = Seq(7L, 3L, 7L, 3L, 41L).toDF("vec_id")
+    val withNull = Seq(Some(3L), None, Some(12L), None).toDF("vec_id")
+    val empty = spark.emptyDataset[Long].toDF("vec_id")
+    for (ids <- Seq(dups, withNull, empty))
+      assert(rows(SimilarityPack.querySetOf(ids)) == rows(semiJoinOf(ids)))
+    assert(rows(SimilarityPack.querySetOf(dups)).size == 3)
+    assert(rows(SimilarityPack.querySetOf(withNull)).size == 2)
+    assert(rows(SimilarityPack.querySetOf(empty)).isEmpty)
+    // duplicates change nothing downstream either
+    assert(SimilarityPack.topkFor(spark, sfTiny, dups)
+      .collect().map(_.toString).toSeq ==
+      SimilarityPack.topkFor(spark, sfTiny, Seq(3L, 7L, 41L).toDF("vec_id"))
+        .collect().map(_.toString).toSeq)
+  }
+
+  test("a query-set frame over QuerySetMax rows fails, naming the cap") {
+    val cap = SimilarityPack.QuerySetMax
+    assert(SimilarityPack.querySetOf(spark.range(cap).toDF("vec_id"))(
+      Tables.embeddings(spark, sfTiny)).count() > 0)
+    val e = intercept[IllegalArgumentException](
+      SimilarityPack.querySetOf(spark.range(cap + 1).toDF("vec_id")))
+    assert(e.getMessage.contains(s"QuerySetMax = $cap"), e.getMessage)
+  }
+
+  test("topkFor prunes its query-side embeddings scan to the ids' buckets") {
+    // three ids in three different buckets (bucket = pmod(hash(id), 32),
+    // the bucketed layout's hash)
+    val ids = (0L until 64L).toDF("vec_id")
+      .select(col("vec_id"), pmod(hash(col("vec_id")), lit(32)).as("b"))
+      .dropDuplicates("b").orderBy("vec_id").limit(3)
+      .select("vec_id")
+    val df = SimilarityPack.topkFor(spark, sfTiny, ids)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("SelectedBucketsCount: 3 out of 32"),
+      s"query-side scan not bucket-pruned:\n$plan")
+  }
 }

@@ -35,4 +35,59 @@ class ResponsesSpec extends SparkSpec {
       col("offset"), col("doc")).collect()(0).getString(0)
     assert(a == b && a.nonEmpty)
   }
+
+  test("empty input renders {} and keeps the mbid_mapping key") {
+    val empty = Seq.empty[(String, Int, Double)].toDF("gid", "offset", "x")
+    assert(Responses.bulkResponse(empty, $"gid", $"offset", struct($"x"))
+      .head().getString(0) == "{}")
+    assert(Responses.bulkResponseWithMapping(empty, $"gid", $"offset",
+      struct($"x"), Map.empty).head().getString(0) ==
+      """{"mbid_mapping":{}}""")
+  }
+
+  test("offset keys sort as strings: 10 before 2") {
+    val rows = Seq(("g", 10, 1.5), ("g", 2, 2.5), ("f", 0, 0.5))
+      .toDF("gid", "offset", "x")
+    assert(Responses.bulkResponse(rows, $"gid", $"offset", struct($"x"))
+      .head().getString(0) ==
+      """{"f":{"0":{"x":0.5}},"g":{"10":{"x":1.5},"2":{"x":2.5}}}""")
+  }
+
+  test("a null selected feature renders as an explicit null") {
+    val rows = Seq[(String, Int, Option[Double], String)](
+      ("a", 0, None, "mp3"), ("a", 1, Some(2.0), null))
+      .toDF("gid", "offset", "length", "codec")
+    val doc = struct($"length", $"codec")
+    val nested = """{"a":{"0":{"length":null,"codec":"mp3"},""" +
+      """"1":{"length":2.0,"codec":null}}"""
+    assert(Responses.bulkResponse(rows, $"gid", $"offset", doc)
+      .head().getString(0) == nested + "}")
+    assert(Responses.bulkResponseWithMapping(rows, $"gid", $"offset", doc,
+      Map("A" -> "a")).head().getString(0) ==
+      nested + ""","mbid_mapping":{"A":"a"}}""")
+  }
+
+  test("the nesting is one aggregate: one exchange in the prepared plan") {
+    // 40 rows over 4 partitions, 5 gids x 8 offsets
+    val rows = spark.range(0, 40, 1, 4)
+      .select(concat(lit("g"), (col("id") % 5).cast("string")).as("gid"),
+        (col("id") / 5).cast("int").as("offset"), col("id"))
+    val df = Responses.bulkResponse(rows, col("gid"), col("offset"),
+      struct(col("id")))
+    def gid(g: Int) = (0 until 8)
+      .map(o => s""""$o":{"id":${o * 5 + g}}""").mkString(s""""g$g":{""",
+        ",", "}")
+    // the prepared plan, read before this frame executes
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }
+    assert(df.head().getString(0) == (0 until 5).map(gid)
+      .mkString("{", ",", "}"))
+    val exchanges = plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    assert(exchanges.size == 1, s"expected one exchange in:\n$plan")
+  }
 }
