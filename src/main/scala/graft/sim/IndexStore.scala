@@ -163,17 +163,12 @@ object IndexStore {
   }
 
   /** Member `name` of the committed artifact at `p` (a path [[ensure]] or
-    * [[ensureVersioned]] returned), read with its memoized schema. The
-    * first read after a commit resolves the schema — one inference job —
-    * and later reads bind it, so they plan without a Spark job. */
+    * [[ensureVersioned]] returned), read with its memoized schema: only
+    * the first read after a commit runs the inference job. */
   def member(s: SparkSession, p: String, name: String): DataFrame = {
     val m = s"$p/$name"
-    val schema = Option(schemaMemo.get(m)).getOrElse {
-      val inferred = s.read.parquet(m).schema
-      schemaMemo.put(m, inferred)
-      inferred
-    }
-    s.read.schema(schema).parquet(m)
+    s.read.schema(schemaMemo.computeIfAbsent(m, _ => s.read.parquet(m).schema))
+      .parquet(m)
   }
 
   /** Stable hash of a builder's PARAMETER string (md5 head, so it does not
