@@ -423,7 +423,7 @@ object GraphPack {
   private def kcoreProfileQuery(s: SparkSession, d: String): DataFrame = {
     val pinned = collection.mutable.ArrayBuffer.empty[DataFrame]
     def ck(df: DataFrame): DataFrame = {
-      val c = Checkpointed("GraphPack.pagerank.iter", df); pinned += c; c
+      val c = Checkpointed("GraphPack.kcore.iter", df); pinned += c; c
     }
     var cur = ck(coOrderEdges(s, d))
     var rows: DataFrame = null
@@ -446,7 +446,7 @@ object GraphPack {
     // materialize the 3-row profile, then free every intermediate block
     // (components pattern — resid_rdds is the canary)
     val result =
-      Checkpointed("GraphPack.pagerank.rounds", rows.orderBy("round"))
+      Checkpointed("GraphPack.kcore.rounds", rows.orderBy("round"))
     pinned.foreach(_.unpersist())
     result
   }
@@ -502,7 +502,7 @@ object GraphPack {
       .limit(100)
     if (!materialize) page
     else {
-      val result = Checkpointed("GraphPack.kcore.page", page)
+      val result = Checkpointed("GraphPack.jaccard.page", page)
       ps.unpersist()
       result
     }
