@@ -384,9 +384,19 @@ object DedupPack {
       // r18 measured the sequential construct as this row's entire cost.
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
-      val exactF = Future(Checkpointed("DedupPack.recall.exact",
+      // The global pool's threads keep the job group they inherited when
+      // they were created, so each future runs its job under the CALLER's
+      // group (and description) and clears it again on the way out.
+      val sc = s.sparkContext
+      val group = Seq("spark.jobGroup.id", "spark.job.description",
+        "spark.job.interruptOnCancel").map(k => k -> sc.getLocalProperty(k))
+      def inCallerGroup[T](body: => T): Future[T] = Future {
+        group.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+        try body finally group.foreach(g => sc.setLocalProperty(g._1, null))
+      }
+      val exactF = inCallerGroup(Checkpointed("DedupPack.recall.exact",
         prefixJaccardPairs(shingled(s, d)).select("doc_a", "doc_b")))
-      val candF = Future(Checkpointed("DedupPack.recall.cand",
+      val candF = inCallerGroup(Checkpointed("DedupPack.recall.cand",
         servedMinhashPairs(s, d)))
       val exact = Await.result(exactF,
         scala.concurrent.duration.Duration.Inf)

@@ -197,7 +197,7 @@ object StatsPack {
 
   /** Build-or-serve the TTL'd stats artifact (see `t3_cached_stats`). */
   private[graft] def ensureStatsCache(s: SparkSession, d: String): String =
-    graft.sim.StatsCache.ensureTtl(s, d, "recent_stats",
+    graft.sim.IndexStore.ensureTtl(s, d, "recent_stats",
       Tables.events(s, d).select("event_id", "ts", "user_id", "value"),
       "event_id", StatsCacheTtlMs, "members=v1") { p =>
       t1Series(s, d).coalesce(1).write.mode("overwrite").parquet(s"$p/stats")
@@ -210,16 +210,17 @@ object StatsPack {
     // ---- T3: the serving-cache layer (reference db/submission_stats.py
     //      :20-25, 127-165 — the redis STATS_CACHE with its 1 h TTL).
     //      The ONE §2 row previously out of scope, closed Spark-first:
-    //      sim.StatsCache persists the computed series once per TTL
+    //      IndexStore.ensureTtl persists the computed series once per TTL
     //      window (redis setex == member + built_at manifest; get ==
-    //      freshness-gated read; expiry == age > ttl rebuilds), and the
-    //      QUERY plan reads ONLY the artifact — no events scan on a hit
-    //      (plan-pinned). Caching is row-invisible: hit or miss, the rows
+    //      freshness-gated member read; expiry == age > ttl rebuilds), and
+    //      the QUERY plan reads ONLY the artifact — no events scan on a
+    //      hit (plan-pinned), and no schema-inference job once the member
+    //      is resolved. Caching is row-invisible: hit or miss, the rows
     //      equal t1_daily_stats' recompute, which is what the shared
     //      oracle checks. Corpus-fingerprint invalidation rides on top of
     //      the TTL (strictly fresher than redis). ------------------------
     "t3_cached_stats" -> ((s, d) =>
-      s.read.parquet(s"${ensureStatsCache(s, d)}/stats").orderBy("day")),
+      member(s, ensureStatsCache(s, d), "stats").orderBy("day")),
 
     // ---- incremental T1 catch-up off the persisted ledger ----------------
     // The reference's compute_stats daemon loop (db/submission_stats.py:

@@ -3,11 +3,13 @@ package graft.tools
 /** Dev tool: write each named query's `.explain("formatted")` output to
   * `<outDir>/<query>_<tag>.txt` — the round's committed plan evidence
   * (plans/rNN/). Usage: PlanDump <sfDir> <outDir> <tag> <q1> [q2 ...].
-  * The plan is the POST-AQE executed plan (same execution discipline as
-  * ExplainCheck: run this DataFrame's own QueryExecution through a
-  * row-discarding foreachPartition, then render), with the initial
-  * formatted plan appended for the scan/pushdown sections that only the
-  * formatted renderer carries. */
+  * The plan is the POST-AQE executed plan, with the initial formatted
+  * plan appended for the scan/pushdown sections that only the formatted
+  * renderer carries. The query runs through THIS DataFrame's own
+  * QueryExecution (a row-discarding foreachPartition over `toRdd`): a
+  * noop-sink write would plan a separate one and leave the initial
+  * adaptive tree here, and a collect() could exhaust the driver on a
+  * large-output query. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "PlanDump <sfDir> <outDir> <tag> <q1> [q2 ...]")

@@ -491,31 +491,104 @@ class IndexStoreSpec extends SparkSpec {
     }
     build() // warm: resolves the artifacts and their member schemas
     // jobs are counted by job group (thread-local, so other threads'
-    // jobs never count); a sentinel job in its own group marks the end,
-    // and listener events arrive in order, so once it is seen every
-    // earlier job start has been counted
-    val group = s"warm-probe-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-          .foreach { g =>
-            if (g == group) jobs.incrementAndGet()
-            else if (g == s"$group-end") seen.countDown()
-          }
+    // jobs never count)
+    val jobs = jobsIn(s"warm-probe-${System.nanoTime()}")(build())
+    assert(jobs == 0, s"building warm serve frames launched $jobs Spark jobs")
+  }
+
+  /** Spark jobs this thread launched while `body` ran. */
+  private def jobsIn(group: String)(body: => Unit): Int =
+    jobGroupsDuring(group)(body).count(_ == group)
+
+  private def ttlProbe(name: String, corpus: DataFrame, ttlMs: Long)(
+      build: String => Unit): String =
+    IndexStore.ensureTtl(spark, sfTiny, name, corpus, "event_id", ttlMs,
+      "spec=v1")(build)
+
+  private def statsCorpus: DataFrame = Tables.events(spark, sfTiny)
+    .select("event_id", "ts", "user_id", "value")
+
+  test("ensureTtl: within-TTL ensures serve, expiry rebuilds") {
+    val corpus = statsCorpus
+    def ens(ttl: Long) = ttlProbe("ttl_spec_probe", corpus, ttl) { p =>
+      spark.range(1).write.mode("overwrite").parquet(s"$p/stats")
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try build() finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() == 0,
-      s"building warm serve frames launched ${jobs.get()} Spark jobs")
+    ens(60000L) // build (or a prior run's still-fresh artifact)
+    val base = IndexStore.buildsRun.get()
+    ens(60000L)
+    assert(IndexStore.buildsRun.get() == base,
+      "second ensure within the TTL must serve, not rebuild")
+    // a ttl change re-keys the params hash -> rebuild, stamping built_at
+    ens(20L)
+    val afterRekey = IndexStore.buildsRun.get()
+    assert(afterRekey == base + 1)
+    Thread.sleep(60)
+    ens(20L) // 60 ms old > 20 ms TTL: redis-style expiry forces recompute
+    assert(IndexStore.buildsRun.get() == afterRekey + 1,
+      "ensure past the TTL must rebuild")
+    // corpus-fingerprint invalidation (the strictly-fresher-than-redis
+    // half): with name/ttl/params all UNCHANGED from a fresh in-TTL
+    // build, a different corpus must rebuild immediately
+    ens(60000L) // re-key back to ttl=60000 and stamp a fresh build
+    val before = IndexStore.buildsRun.get()
+    ens(60000L)
+    assert(IndexStore.buildsRun.get() == before, "control: in-TTL hit")
+    ttlProbe("ttl_spec_probe", corpus.limit(10), 60000L) { p =>
+      spark.range(1).write.mode("overwrite").parquet(s"$p/stats")
+    }
+    assert(IndexStore.buildsRun.get() == before + 1,
+      "a changed corpus fingerprint must invalidate inside the TTL")
+  }
+
+  test("ensureTtl: an in-TTL hit launches no Spark job") {
+    val corpus = statsCorpus
+    val name = s"ttl_jobs_${System.nanoTime()}"
+    def ens(ttl: Long) = ttlProbe(name, corpus, ttl) { p =>
+      spark.range(1).write.mode("overwrite").parquet(s"$p/stats")
+    }
+    ens(60000L) // builds, and memoizes the fingerprint and the stamp
+    val jobs = jobsIn(s"ttl-hit-${System.nanoTime()}")(ens(60000L))
+    assert(jobs == 0, s"an in-TTL hit launched $jobs Spark jobs")
+    // past the TTL the warm memo must not serve: the call falls back to
+    // the manifest, which is just as expired, and rebuilds
+    ens(20L)
+    val b0 = IndexStore.buildsRun.get()
+    Thread.sleep(60)
+    ens(20L)
+    assert(IndexStore.buildsRun.get() == b0 + 1,
+      "a call past the TTL served from a warm memo")
+  }
+
+  test("a 4-column manifest is fresh untimed, stale under a TTL") {
+    // manifests written before `built_at_ms` existed carry four columns;
+    // the unbounded gates keep serving them, only an age bound needs it
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, sfTiny)
+    val fp = IndexStore.fingerprint(emb, "vec_id")
+    val tag = System.nanoTime()
+    def member(q: String): Unit = Seq(("m", 1L)).toDF("tag", "v")
+      .coalesce(1).write.mode("overwrite").parquet(s"$q/member")
+    def plant(p: String, stamp: (Long, Long, Long), params: String): Unit =
+      assert(IndexStore.commitBuild(spark, p) { q =>
+        member(q)
+        Seq((stamp._1, stamp._2, stamp._3, IndexStore.paramsHash(params)))
+          .toDF("corpus_rows", "max_id", "content_hash", "params_hash")
+          .coalesce(1).write.mode("overwrite").parquet(s"$q/manifest")
+      })
+    var builds = 0
+    def counted(q: String): Unit = { builds += 1; member(q) }
+    val scanned = s"old_layout_$tag"
+    plant(IndexStore.path(sfTiny, scanned), fp, "p=1")
+    IndexStore.ensure(spark, sfTiny, scanned, emb, "vec_id", "p=1")(counted)
+    val versioned = s"old_layout_v_$tag"
+    plant(IndexStore.path(sfTiny, versioned), (7L, -1L, -1L), "p=1")
+    IndexStore.ensureVersioned(spark, sfTiny, versioned, 7L, "p=1")(counted)
+    assert(builds == 0, "a 4-column manifest must serve the unbounded gates")
+    val timed = s"old_layout_t_$tag"
+    val cfp = IndexStore.fingerprint(statsCorpus, "event_id")
+    plant(IndexStore.path(sfTiny, s"ttl_$timed"), cfp, "spec=v1,ttl=60000")
+    ttlProbe(timed, statsCorpus, 60000L)(counted)
+    assert(builds == 1, "a 4-column manifest has no build time to age")
   }
 
   test("a rebuild on a changed corpus re-resolves member schemas: reads " +

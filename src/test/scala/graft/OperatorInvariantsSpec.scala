@@ -2661,6 +2661,20 @@ class OperatorInvariantsSpec extends SparkSpec {
     assert(nr == exact.intersect(lsh).count())
   }
 
+  test("dd_lsh_recall runs its checkpoint jobs in the caller's group") {
+    // the two checkpoints run on Scala's global pool, whose threads keep
+    // the job group they inherited when they were created: each
+    // construction must bill every job it starts to its own group
+    run("dd_lsh_recall") // artifacts built and pool threads created
+    for (g <- Seq(s"lsh-recall-a-${System.nanoTime()}",
+        s"lsh-recall-b-${System.nanoTime()}")) {
+      val groups = jobGroupsDuring(g) { run("dd_lsh_recall"); () }
+      assert(groups.size >= 3, s"expected the checkpoint jobs: $groups")
+      assert(groups.forall(_ == g),
+        s"construction under $g started jobs in other groups: $groups")
+    }
+  }
+
   test("dd_component_sizes conserves label mass against dd_components " +
     "and never reports singletons") {
     val labels = run("dd_components").collect().length.toLong
@@ -2711,42 +2725,6 @@ class OperatorInvariantsSpec extends SparkSpec {
     val pairs = rows.map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")))
     assert(pairs.toSet == (0 until 200).map(p => (2L * p, 2L * p + 1)).toSet)
     assert(rows.forall(_.getAs[Double]("jaccard") == 1.0))
-  }
-
-  test("StatsCache TTL: within-TTL ensures serve, expiry rebuilds") {
-    import graft.sim.StatsCache
-    val corpus = Tables.events(spark, sfTiny)
-      .select("event_id", "ts", "user_id", "value")
-    def ens(ttl: Long) = StatsCache.ensureTtl(spark, sfTiny,
-      "ttl_spec_probe", corpus, "event_id", ttl, "spec=v1") { p =>
-      spark.range(1).write.mode("overwrite").parquet(s"$p/stats")
-    }
-    ens(60000L) // build (or a prior run's still-fresh artifact)
-    val base = StatsCache.rebuilds.get()
-    ens(60000L)
-    assert(StatsCache.rebuilds.get() == base,
-      "second ensure within the TTL must serve, not rebuild")
-    // a ttl change re-keys the params hash -> rebuild, stamping built_at
-    ens(20L)
-    val afterRekey = StatsCache.rebuilds.get()
-    assert(afterRekey == base + 1)
-    Thread.sleep(60)
-    ens(20L) // 60 ms old > 20 ms TTL: redis-style expiry forces recompute
-    assert(StatsCache.rebuilds.get() == afterRekey + 1,
-      "ensure past the TTL must rebuild")
-    // corpus-fingerprint invalidation (the strictly-fresher-than-redis
-    // half): with name/ttl/params all UNCHANGED from a fresh in-TTL
-    // build, a different corpus must rebuild immediately
-    ens(60000L) // re-key back to ttl=60000 and stamp a fresh build
-    val before = StatsCache.rebuilds.get()
-    ens(60000L)
-    assert(StatsCache.rebuilds.get() == before, "control: in-TTL hit")
-    StatsCache.ensureTtl(spark, sfTiny, "ttl_spec_probe",
-      corpus.limit(10), "event_id", 60000L, "spec=v1") { p =>
-      spark.range(1).write.mode("overwrite").parquet(s"$p/stats")
-    }
-    assert(StatsCache.rebuilds.get() == before + 1,
-      "a changed corpus fingerprint must invalidate inside the TTL")
   }
 
   test("d7_bag_ops: count algebra satisfies the multiset identities " +

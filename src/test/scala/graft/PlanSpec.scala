@@ -1033,6 +1033,24 @@ class PlanSpec extends SparkSpec {
       s"raw localCheckpoint outside plans.Checkpointed: $offenders")
   }
 
+  test("meta-gate: the artifact gate lives ONLY in sim.IndexStore") {
+    // Every artifact family commits and proves freshness through
+    // IndexStore's one gate; a second manifest writer, committer or
+    // freshness check elsewhere in main source is a gate growing back.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.exists(root), s"source root missing: $root")
+    val gate = """commitBuild\(|writeManifest\(|def\s+isFresh\b""".r
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.toString.endsWith("sim/IndexStore.scala"))
+      .flatMap(p => gate.findAllIn(java.nio.file.Files.readString(p))
+        .map(m => s"$p: $m"))
+      .toList
+    assert(offenders.isEmpty,
+      s"artifact gate code outside sim.IndexStore: $offenders")
+  }
+
   test("suite sweep: auto-broadcast OFF — no query degrades to a " +
     "cartesian product when nothing fits the threshold") {
     // At 100 TB no join side clears an auto-broadcast threshold: every
