@@ -85,16 +85,15 @@ object Bench {
       catch { case _: Throwable => cpusReq }
     // Optional arg: comma-separated query subset — the builder's
     // single-query timing loop. The driver always runs with no args.
-    val selected: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      if (args.nonEmpty) {
-        val ks = args(0).split(",").map(_.trim).toSet
-        SparkEntry.queries.view.filterKeys(ks).toMap
-      } else SparkEntry.queries
+    val selected =
+      if (args.nonEmpty) SparkEntry.select(args(0).split(",").map(_.trim).toSet)
+      else SparkEntry.queries
     // Bench profile: queries with an intrinsic train/search budget (m4's CV
     // grid) run a reduced profile so the timed artifact measures the
     // pipeline, not redundant hyperparameter fits. Verify never sets this.
     System.setProperty("graft.bench.profile", "true")
     val spark = Engine.session(cpus)
+    val ledger = tools.JobLedger.install(spark.sparkContext)
     // Steady-state measurement: run every query once against the smallest
     // scale factor first. Whole-stage codegen compilation and C2 JIT are
     // fixed per plan shape, not per-byte work — unwarmed, they charge
@@ -119,7 +118,7 @@ object Bench {
     // (`prepare_sec`) so the build-once cost stays visible in the artifact
     // without contaminating the per-query numbers.
     // Machine state BEFORE any bench work: loadavg_start (below) is
-    // sampled after the prepare+warm phases, whose own 32-thread work
+    // sampled after the prepare+warm phases, whose own all-core work
     // dominates the 1-minute average by then — so loadavg_pre is the
     // number that actually distinguishes external capture-time
     // contamination from the bench's self-induced load.
@@ -130,8 +129,8 @@ object Bench {
     // reads raw parquet and writes its own layout/artifact path, and
     // Tables/IndexStore lock per table/path — so they fan out across a
     // fixed pool instead of paying their SUM serially (r8 recorded
-    // prepare_sec=156 s serial; each single build underuses the 32
-    // cores, so concurrent Spark jobs fill the gaps — this is exactly
+    // prepare_sec=156 s serial; each single build underuses the cores,
+    // so concurrent Spark jobs fill the gaps — this is exactly
     // how an ingest cluster would run independent index builds). Pool of
     // 8 keeps per-build memory headroom.
     locally {
@@ -179,7 +178,7 @@ object Bench {
       try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () } // timed pass records real failures
     // Capture discipline: the 1-minute loadavg after prepare+warm is
-    // dominated by the bench's OWN just-finished 32-thread work (a lagging
+    // dominated by the bench's OWN just-finished all-core work (a lagging
     // average), and r7/r8 were both recorded with loadavg_start > 8, which
     // the judge had to caveat as possible contamination. Let the average
     // decay below the clean-capture bar before starting the timed loop —
@@ -188,6 +187,8 @@ object Bench {
     // results are unaffected (best-of-2 still guards transient noise);
     // this only buys an interpretable loadavg_start.
     val settleBar = 4.5
+    // One timed attempt: seconds, their construct part, its job group.
+    case class Attempt(sec: Double, construct: Double, group: String)
     // One full timed capture + the state it ran in. The contamination
     // `score` (> 1 = some clean-capture gate violated) drives the bounded
     // settle-and-retry below: either the settle wait never reached the
@@ -199,14 +200,14 @@ object Bench {
     // they cannot be self-contaminated. Thresholds: single-thread CPU cal
     // repeats within a few % on an idle host (1.3x = external CPU
     // pressure); sched cal is scheduler-noisy, so 2.5x.
-    case class Capture(results: Seq[(String, Double)],
+    case class Capture(best: Seq[(String, Option[Attempt])],
         codegen: Seq[(String, (Long, Double))], load0: Double,
         load1: Double, gcMs: Long, cpuCal: Double, schedCal: Double,
         cpuCalEnd: Double, schedCalEnd: Double, settleSec: Double) {
       def score: Double = Seq(load0 / settleBar,
         cpuCalEnd / (cpuCal * 1.3), schedCalEnd / (schedCal * 2.5)).max
     }
-    def timedCapture(): Capture = {
+    def timedCapture(round: Int): Capture = {
       val settleT0 = System.nanoTime()
       while (loadavg() > settleBar &&
           (System.nanoTime() - settleT0) / 1e9 < 150.0)
@@ -223,11 +224,14 @@ object Bench {
         // Catalyst prune every projected column and eliminate sorts, so
         // map-only queries would time a near-empty footer scan instead of
         // their actual expression work. The noop write materializes every
-        // output row without writing bytes.
-        def once(): Double = {
+        // output row without writing bytes. The construct mark splits the
+        // timed number without planning anything the write does not.
+        def once(group: String): Attempt = {
           val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
+          val df = fn(spark, sfDir)
+          val t1 = System.nanoTime()
+          df.write.format("noop").mode("overwrite").save()
+          Attempt((System.nanoTime() - t0) / 1e9, (t1 - t0) / 1e9, group)
         }
         // Best-of-2 within the same JVM: a transient scheduler hiccup or GC
         // pause during one run cannot inflate the recorded number, so the
@@ -237,19 +241,20 @@ object Bench {
         // Each run is caught separately: a transient failure on one run
         // must not discard the other's complete measurement — the sentinel
         // -1 is recorded only when BOTH runs fail (never fast-looking).
-        def attempt(): Double = try once() catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          -1.0
+        // Each attempt has its own job group, so the ledger row reported
+        // beside a time is the row of the attempt that set it.
+        def attempt(i: Int): Option[Attempt] = {
+          val group = s"$name@$round.$i"
+          spark.sparkContext.setJobGroup(group, name)
+          try Some(once(group)) catch { case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            None
+          } finally spark.sparkContext.clearJobGroup()
         }
-        // per-query job group, as Verify sets it: every job the two runs
-        // launch is attributable to this query
         val (n0, ms0) = codegenSoFar()
-        spark.sparkContext.setJobGroup(name, name)
-        val runs = try Seq(attempt(), attempt()).filter(_ >= 0)
-          finally spark.sparkContext.clearJobGroup()
+        val best = Seq(attempt(1), attempt(2)).flatten.minByOption(_.sec)
         val (n1, ms1) = codegenSoFar()
-        (name -> (if (runs.isEmpty) -1.0 else runs.min),
-          name -> (n1 - n0, ms1 - ms0))
+        (name -> best, name -> (n1 - n0, ms1 - ms0))
       }
       val load1 = loadavg()
       val gcMs = gcMillis() - gc0
@@ -263,17 +268,17 @@ object Bench {
     // loaded for the entire retry budget. At most 2 retries AND a 420 s
     // wall budget (the driver's bench window must never be starved into
     // producing NO artifact); the cleanest capture wins.
-    var capture = timedCapture()
+    var capture = timedCapture(0)
     var retries = 0
     while (capture.score > 1.0 && retries < 2 &&
         (System.nanoTime() - mainT0) / 1e9 < 420.0) {
       retries += 1
       System.err.println(f"[bench] contaminated capture " +
         f"(score ${capture.score}%.2f) — settling and retrying ($retries)")
-      val again = timedCapture()
+      val again = timedCapture(retries)
       if (again.score < capture.score) capture = again
     }
-    val results = capture.results
+    val results = capture.best.map { case (k, a) => k -> a.fold(-1.0)(_.sec) }
     val settleSec = capture.settleSec
     val cpuCal = capture.cpuCal
     val schedCal = capture.schedCal
@@ -330,25 +335,33 @@ object Bench {
     // r7's tail head-truncated the ann_*/dd_* values into unrecoverability.
     // Three-layer record, cheapest last:
     //   1. the full NAMED map, printed first (recoverable when the whole
-    //      stdout is kept; truncated first when it isn't) and also written
-    //      to bench_detail.json next to the repo for archaeology, there
-    //      with each query's [codegen compiles, compile ms] beside it;
+    //      stdout is kept; truncated first when it isn't) with each query's
+    //      `layers` beside it (construct and write seconds of its best
+    //      attempt plus that attempt's ledger row), and also written to
+    //      bench_detail.json next to the repo for archaeology, there with
+    //      each query's [codegen compiles, compile ms] too;
     //   2. a COMPACT values line — per-query seconds as a JSON array in
     //      sorted-query-name order (the names are static: SparkEntry
     //      .queries keys, sorted — so ~0.7 KB carries all 102 values
     //      inside the tail window);
     //   3. the short parseable total line, very last.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$tele,"sf":"$sfDir"}""")
+    // stop() drains the asynchronous listener bus: every ledger row is
+    // complete once it returns
+    spark.stop()
+    val layers = capture.best.collect { case (k, Some(a)) =>
+      val row = ledger.row(a.group).getOrElse(tools.JobLedger.Row())
+      s""""$k":{"construct":${ms(a.construct)},""" +
+        s""""write":${ms(a.sec - a.construct)}, ${row.fields}}"""
+    }.mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"layers":$layers,$tele,"sf":"$sfDir"}""")
     // subset runs are builder iteration — never overwrite the round's
     // full-suite sidecar artifact with a partial record
     try if (args.isEmpty) java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"),
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"codegen":$cg,$tele,"sf":"$sfDir"}
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"layers":$layers,"codegen":$cg,$tele,"sf":"$sfDir"}
 """)
     catch { case e: Throwable =>
       System.err.println(s"[bench] bench_detail.json not written: $e") }
-    spark.stop()
-    // after spark.stop(), which can itself log
     System.out.flush()
     val values = results.map { case (_, v) => ms(v).toString }
       .mkString("[", ",", "]")

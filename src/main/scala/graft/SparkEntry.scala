@@ -32,6 +32,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     packs.map(_._1).reduce(_ ++ _)
 
+  /** `queries` narrowed to a main's subset; an unknown name fails the run
+    * instead of silently timing nothing. */
+  def select(names: Set[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val missing = names.diff(queries.keySet).toSeq.sorted
+    require(missing.isEmpty, s"unknown queries: ${missing.mkString(", ")}")
+    queries.view.filterKeys(names).toMap
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -37,8 +37,6 @@ object Verify {
       else None
     val selected = subset match {
       case Some(ks0) =>
-        val missing = ks0.diff(SparkEntry.queries.keySet)
-        require(missing.isEmpty, s"unknown queries: $missing")
         // Row-identity oracles (the `_indexed` twins) read ANOTHER entry's
         // verify output via OutToken — a subset naming only the twin would
         // dump an oracle over a glob this run never writes. Expand the
@@ -58,21 +56,16 @@ object Verify {
             ks = ks ++ more
           }
         }
-        SparkEntry.queries.view.filterKeys(ks).toMap
+        SparkEntry.select(ks)
       case None => SparkEntry.queries
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Engine.session(cpus)
-    // Memory-pressure drive instrumentation (GRAFT_SPILL_REPORT=1): every
-    // stage's spill/peak-memory lands in verify_spill.json attributed to
-    // the query whose job group ran it — the starved-heap (-Xmx4g) drive
-    // reads completions from verify_summary.json and pressure from here.
-    val spill = sys.env.get("GRAFT_SPILL_REPORT").map { _ =>
-      val l = new tools.SpillReport
-      l.parallelism = spark.sparkContext.defaultParallelism
-      spark.sparkContext.addSparkListener(l)
-      l
-    }
+    // Every stage's spill, peak memory and shuffle bytes land in
+    // verify_spill.json, billed to the query whose job group ran it: the
+    // starved-heap (-Xmx4g) drive reads pressure from here, and a
+    // sequential drive feeds the shuffle-bytes ratchet.
+    val ledger = tools.JobLedger.install(spark.sparkContext)
     new java.io.File(outDir).mkdirs()
     val absOut = Paths.get(outDir).toAbsolutePath.toString
     // JSON string escape (JsonUtil): backslash, quote, and ALL control
@@ -89,7 +82,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Materialize the bucketed/partitioned layout before the concurrent
     // drive (one writer, then every query reads the stored layout).
-    // Job-grouped so the spill report attributes the layout write to
+    // Job-grouped so the ledger attributes the layout write to
     // "prepare" instead of an anonymous "ungrouped" bucket.
     spark.sparkContext.setJobGroup("prepare", "prepare")
     Tables.prepare(spark, sfDir)
@@ -134,7 +127,7 @@ object Verify {
         val q0 = System.nanoTime()
         def secs = math.rint((System.nanoTime() - q0) / 1e7) / 100
         // thread-local job group: attributes every stage this future's
-        // jobs run to the query name (read back by SpillReport)
+        // jobs run to the query name (read back by the ledger)
         spark.sparkContext.setJobGroup(name, name)
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -174,14 +167,12 @@ object Verify {
       scala.concurrent.duration.Duration.Inf)
     pool.shutdown()
     writeSummary()
-    // Serialize the spill report only AFTER spark.stop(): the listener bus
+    // Serialize the ledger only AFTER spark.stop(): the listener bus
     // is asynchronous, and onStageCompleted events for the last stages may
     // still be queued when the futures resolve — stop() drains every queue
     // before returning, so the post-stop snapshot is complete (a pre-stop
     // write under-counted spill, biasing the memory drive toward "clean").
     spark.stop()
-    spill.foreach { l =>
-      Files.writeString(Paths.get(s"$outDir/verify_spill.json"), l.json())
-    }
+    Files.writeString(Paths.get(s"$outDir/verify_spill.json"), ledger.json())
   }
 }

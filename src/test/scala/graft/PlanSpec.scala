@@ -1051,6 +1051,22 @@ class PlanSpec extends SparkSpec {
       s"artifact gate code outside sim.IndexStore: $offenders")
   }
 
+  test("meta-gate: the job-group ledger is main source's ONLY SparkListener") {
+    // Per-query stage accounting lives in one place (tools.JobLedger); a
+    // second listener, named or anonymous, is a side ledger growing back.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.exists(root), s"source root missing: $root")
+    val listener = """(extends|new)\s+([\w.]+\.)?SparkListener(Interface)?\b""".r
+    val defs = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => listener.findAllIn(java.nio.file.Files.readString(p))
+        .map(m => s"${root.relativize(p)}: $m"))
+      .toList
+    assert(defs == List("tools/JobLedger.scala: extends SparkListener"),
+      s"SparkListeners in main source: $defs")
+  }
+
   test("suite sweep: auto-broadcast OFF — no query degrades to a " +
     "cartesian product when nothing fits the threshold") {
     // At 100 TB no join side clears an auto-broadcast threshold: every

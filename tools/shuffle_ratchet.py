@@ -15,7 +15,7 @@ recorded at sf0.1 with a SEQUENTIAL drive and a FRESH index root, so
 memoized artifact-build stages have deterministic per-query attribution:
 
     rm -rf /tmp/graft_idx_ratchet
-    GRAFT_SPILL_REPORT=1 GRAFT_VERIFY_THREADS=1 \
+    GRAFT_VERIFY_THREADS=1 \
       SPARK_GRAFT_INDEX_ROOT=/tmp/graft_idx_ratchet SPARK_GRAFT_CPUS=32 \
       java ... graft.Verify /root/testdata/sf0.1 /tmp/verify_ratchet
     python3 tools/shuffle_ratchet.py /tmp/verify_ratchet --regen
@@ -25,7 +25,8 @@ defaultParallelism but not across settings (split regrouping changes
 shuffle-block compression granularity — measured ±~2.4× on ~1 MB
 shuffles between local[16] and local[32], r17: 14 false flags traced
 to a 16-seeded manifest compared against 32-cpu drives). The capture
-records the session's defaultParallelism (verify_spill.json
+records the session's defaultParallelism (every Verify drive writes
+verify_spill.json from its job-group ledger, tools.JobLedger; its
 `parallelism`), --regen banks it as the `__parallelism__` manifest row,
 and a gate run REFUSES a capture whose setting differs from the banked
 pin instead of reporting nonsense byte deltas.
@@ -64,8 +65,8 @@ regen = "--regen" in sys.argv
 
 spill_path = os.path.join(out_dir, "verify_spill.json")
 if not os.path.exists(spill_path):
-    print(f"FAIL: {spill_path} missing — run graft.Verify with "
-          "GRAFT_SPILL_REPORT=1")
+    print(f"FAIL: {spill_path} missing — run graft.Verify into "
+          f"{out_dir} first (it writes the file after spark.stop())")
     sys.exit(2)
 
 with open(spill_path) as f:
@@ -102,7 +103,7 @@ if pin is not None and cap_par != pin:
 # (ADVICE r16: the old `fresh.get(q, 0)` let small-shuffle queries vanish
 # silently whenever old_bytes <= ~TOL*SLACK). Absence means either a
 # retired query (gone from SparkEntry.queries) or shuffle bytes dropping
-# to exactly 0 (the spill report keeps only spill/peak/shuffle>0 rows) —
+# to exactly 0 (the ledger keeps only spill/peak/shuffle>0 rows) —
 # both are manifest edits that must be banked in the same diff, never
 # inferred from a band that happens to contain 0.
 failures = ratchet_lib.band_failures(
