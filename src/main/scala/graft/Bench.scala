@@ -185,8 +185,11 @@ object Bench {
     // bounded, and the wait itself is recorded (`settle_sec`) so the
     // artifact shows whether the bar was reached or the cap hit. Timed
     // results are unaffected (best-of-2 still guards transient noise);
-    // this only buys an interpretable loadavg_start.
+    // this only buys an interpretable loadavg_start. A subset run is
+    // iteration, not a headline capture: it neither settles nor retries,
+    // and records the load it started under as measured.
     val settleBar = 4.5
+    val subset = args.nonEmpty
     // One timed attempt: seconds, their construct part, its job group.
     case class Attempt(sec: Double, construct: Double, group: String)
     // One full timed capture + the state it ran in. The contamination
@@ -209,7 +212,7 @@ object Bench {
     }
     def timedCapture(round: Int): Capture = {
       val settleT0 = System.nanoTime()
-      while (loadavg() > settleBar &&
+      while (!subset && loadavg() > settleBar &&
           (System.nanoTime() - settleT0) / 1e9 < 150.0)
         Thread.sleep(5000)
       val settleSec = (System.nanoTime() - settleT0) / 1e9
@@ -270,7 +273,7 @@ object Bench {
     // producing NO artifact); the cleanest capture wins.
     var capture = timedCapture(0)
     var retries = 0
-    while (capture.score > 1.0 && retries < 2 &&
+    while (!subset && capture.score > 1.0 && retries < 2 &&
         (System.nanoTime() - mainT0) / 1e9 < 420.0) {
       retries += 1
       System.err.println(f"[bench] contaminated capture " +

@@ -58,6 +58,13 @@ object Engine {
       // warm 215-query pass 130–141 s → 85–96 s, metaspace + code cache
       // ≈ +40 MB.
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
+      // Value lists of two or more plan as InSet, whose set the generated
+      // code reads as a reference object; an In list (Spark converts only
+      // past 10 values) inlines its literals, so every top-K request with
+      // new ids compiled two classes again: 40–60 ms of a 190–220 ms warm
+      // tuned-IVF request at sf0.001 on 4 threads, 150–155 ms without.
+      // Parquet pushdown and bucket pruning read InSet as they read In.
+      .config("spark.sql.optimizer.inSetConversionThreshold", "1")
     // Drive overrides (GRAFT_ENGINE_CONF="k=v;k=v"): the recomputation-
     // determinism and memory-pressure drives re-run the FULL suite under
     // adversarial planner/runtime settings (AQE off, speculation on,

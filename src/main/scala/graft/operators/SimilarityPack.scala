@@ -37,7 +37,13 @@ object SimilarityPack {
   // set (ids < 10) — one instantiation of the same code path the
   // parameterized API serves (equality pinned by QuerySetSpec). A request's
   // set is a harvest: its ids are read once, when the query is built, and
-  // bind in as literals, so the plan carries no request-side join.
+  // bind in as literals, so the plan carries no request-side join; probes
+  // score centroids harvested once per committed artifact through the
+  // map-side [[nearestCells]] kernel, and a bounded set ends in the
+  // bounded [[requestOrder]]. A warm request runs three Spark jobs on each
+  // serving path (exact, tuned IVF, composed; five, seven and seven with
+  // probe windows and range sorts): the query-side broadcast, the ranking
+  // window's shuffle and the top-n result stage.
 
   /** Restricts a vec_id-keyed frame to the query rows. */
   private[graft] type QuerySet = DataFrame => DataFrame
@@ -61,8 +67,33 @@ object SimilarityPack {
     val got = ids.select(col("vec_id")).limit(QuerySetMax + 1).collect()
     require(got.length <= QuerySetMax, "query set frame holds more than " +
       s"QuerySetMax = $QuerySetMax rows")
-    val vs = got.filterNot(_.isNullAt(0)).map(_.get(0)).distinct.toSeq
-    _.filter(col("vec_id").isin(vs: _*))
+    IdSet(got.filterNot(_.isNullAt(0)).map(_.get(0)).distinct.toSeq)
+  }
+
+  /** The harvested ids of a [[querySetOf]] set. */
+  private final case class IdSet(ids: Seq[Any]) extends QuerySet {
+    def apply(df: DataFrame): DataFrame =
+      df.filter(col("vec_id").isin(ids: _*))
+  }
+
+  /** Most distinct query ids `qs` selects, where construction bounds it:
+    * the harvested ids, or 10 for [[DefaultQueries]] (vec_ids are
+    * non-negative). None for any other selector. */
+  private def queryBound(qs: QuerySet): Option[Int] = qs match {
+    case IdSet(ids) => Some(ids.size)
+    case _ if qs eq DefaultQueries => Some(10)
+    case _ => None
+  }
+
+  /** A top-k answer sorted by `by`; with at most `bound` query ids,
+    * limited to bound·k rows. Each id has at most k rows, so the limit never
+    * truncates: it only plans the sort as one TakeOrderedAndProject, with
+    * no range-sampling job or exchange. An unbounded answer (a stream's
+    * batch of vectors) keeps the plain sort. */
+  private def requestOrder(top: DataFrame, bound: Option[Int], k: Int,
+      by: String*): DataFrame = {
+    val sorted = top.orderBy(by.map(col): _*)
+    bound.fold(sorted)(q => sorted.limit(q * k))
   }
 
   /** Bulk exact top-K for an arbitrary query-id frame (reference N4's bulk
@@ -676,46 +707,35 @@ object SimilarityPack {
     val top = scored.withColumn("rank", row_number().over(w).cast(LongType))
       .filter(col("rank") <= 10)
       .select("query_id", "rank", "neighbor_id")
-    if (ordered) top.orderBy("query_id", "rank") else top
+    if (ordered) requestOrder(top, queryBound(qs), 10, "query_id", "rank")
+    else top
   }
 
   /** IVF-style ANN top-k (reference N3's index shape): coarse quantizer =
     * per-label centroids (exact decimal sums, bit-identical across
-    * engines), each query probes its `nprobe` nearest cells and scores only
-    * their members. Cells partition the corpus, so multi-cell candidates
-    * never duplicate. */
+    * engines), harvested to the driver, and each query probes its `nprobe`
+    * [[nearestCells]] and scores only their members. Cells partition the
+    * corpus, so multi-cell candidates never duplicate. */
   private[graft] def ivfTopk(s: SparkSession, d: String, nprobe: Int,
       k: Int = 5, qs: QuerySet = DefaultQueries): DataFrame = {
     val emb = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-    val centroids = Tables.embeddings(s, d)
-      .select(col("label"),
-        posexplode(asDouble(col("embedding"))).as(Seq("pos", "val")))
-      .groupBy(col("label"), col("pos"))
-      .agg(gridMean(col("val")).as("c"))
-      .groupBy(col("label"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-        x => x.getField("c")).as("cv"))
-    val q = qs(emb)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val wAssign = Window.partitionBy(col("query_id"))
-      .orderBy(col("cc").desc, col("label"))
-    val assigned = q.crossJoin(broadcast(centroids))
-      .withColumn("cc", cosine(col("qv"), col("cv")))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("qv"), col("label"))
+      .select(col("vec_id"), col("label").cast(LongType).as("cell"),
+        asDouble(col("embedding")).as("v"))
+    val cents = harvestCentroids(cellCentroids(emb.select("cell", "v")))
+    val probes = qs(emb).select(col("vec_id").as("query_id"),
+      col("v").as("qv"), nearestCells(cents.map { case (cell, cv) =>
+        cell -> cosine(col("v"), typedLit(cv)) }, nprobe).getField("cell")
+        .as("probe"))
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    assigned.join(emb, Seq("label"))
+    val top = probed(emb, probes)
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), asLong(col("label")).as("cell"),
-        col("vec_id").as("neighbor_id"),
+      .select(col("query_id"), col("cell"), col("vec_id").as("neighbor_id"),
         cosine(col("qv"), col("v")).as("cos"))
       .withColumn("rank", asLong(row_number().over(wRank)))
       .filter(col("rank") <= k)
       .select("query_id", "cell", "rank", "neighbor_id")
-      .orderBy("query_id", "rank")
+    requestOrder(top, queryBound(qs), k, "query_id", "rank")
   }
 
   /** IVF with TRAINED centroids, top-k: one Lloyd iteration — cent0 =
@@ -750,25 +770,44 @@ object SimilarityPack {
     df.crossJoin(broadcast(n)).filter(pmod(u, k) === 0).drop("n")
   }
 
-  /** The nearest-centroid kernel every ANN trainer and assigner runs
-    * through. Each (cell, score) pair scores the row's own vector against
-    * one HARVESTED centroid bound in as literals (K rows of driver
-    * metadata, never corpus rows); the winner is `greatest` over
-    * (score, −cell, cell) structs — highest score, ties to the LOWER cell.
-    * One map-side expression: no join, no aggregate, no window, so an
-    * assignment costs no exchange and downstream plans carry no training
-    * lineage. Returns the winning struct (read `cell`, or `score`); with
-    * no centroids (an empty corpus harvests none) a null struct, since
-    * there are no rows to label. */
-  private[graft] def nearestCell(cells: Seq[(Long, Column)]): Column =
+  /** The top-n kernel every ANN trainer, assigner and probe runs through.
+    * Each (cell, score) pair scores the row's own vector against one
+    * HARVESTED centroid bound in as literals (K rows of driver metadata,
+    * never corpus rows); the result is the `n` best (score, −cell, cell)
+    * structs in descending struct order — highest score first, ties to
+    * the LOWER cell — as `slice(sort_array(…, asc = false), 1, n)`, the
+    * cells a `row_number` window over (score desc, cell) keeps at rn ≤ n.
+    * n = 1 takes `greatest`, the same order without the sort. One
+    * map-side expression: no join, no aggregate, no window, so an
+    * assignment or a probe costs no exchange and downstream plans carry no
+    * training lineage. With no centroids (an empty corpus harvests none)
+    * the array is null: there is nothing to probe. */
+  private[graft] def nearestCells(cells: Seq[(Long, Column)], n: Int)
+      : Column =
     cells.map { case (cell, score) =>
       struct(score.as("score"), lit(-cell).as("nc"), lit(cell).as("cell"))
     } match {
       case Seq() =>
-        lit(null).cast("struct<score:double,nc:bigint,cell:bigint>")
-      case Seq(one) => one
-      case many => greatest(many: _*)
+        lit(null).cast("array<struct<score:double,nc:bigint,cell:bigint>>")
+      case Seq(one) => array(one)
+      case many if n == 1 => array(greatest(many: _*))
+      case many => slice(sort_array(array(many: _*), asc = false), 1, n)
     }
+
+  /** [[nearestCells]] at n = 1: the winning struct (read `cell`, or
+    * `score`), null with no centroids. */
+  private[graft] def nearestCell(cells: Seq[(Long, Column)]): Column =
+    nearestCells(cells, 1).getItem(0)
+
+  /** The rows of `cands` whose `cell` a query row of `probes` probes, as
+    * membership in that row's `probe` array of [[nearestCells]]: one
+    * broadcast join against the request-sized probe rows, which are never
+    * fanned out to one row per cell. Each candidate row is tested against
+    * every query: the same order as the join's output, since each query
+    * probes a fixed share (nprobe/K) of the cells. */
+  private def probed(cands: DataFrame, probes: DataFrame): DataFrame =
+    cands.join(broadcast(probes), array_contains(col("probe"), col("cell")))
+      .drop("probe")
 
   /** The one-Lloyd-iteration training: (trained centroids (cell, cv),
     * trained assignment (vec_id, v, cell)) — the content of the persisted
@@ -815,14 +854,14 @@ object SimilarityPack {
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("cell"))
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    a1.join(broadcast(q), Seq("cell"))
+    val top = a1.join(broadcast(q), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("cell"), col("vec_id").as("neighbor_id"),
         cosine(col("qv"), col("v")).as("cos"))
       .withColumn("rank", asLong(row_number().over(wRank)))
       .filter(col("rank") <= k)
       .select("query_id", "cell", "rank", "neighbor_id")
-      .orderBy("query_id", "rank")
+    requestOrder(top, queryBound(qs), k, "query_id", "rank")
   }
 
   /** Per-cell mean vectors from (cell, v) rows — exact decimal sums so the
@@ -900,11 +939,38 @@ object SimilarityPack {
     * Gonzalez seed rounds (r18): every value is computed by the identical
     * Spark expressions (exact BIGINT sums, the same round/cast, the same
     * sqrt∘gridDot norm), only materialized instead of broadcast. */
-  private def harvestTunedCentroids(assign: DataFrame)
-      : Seq[(Long, Seq[Long], Double)] =
-    tunedCentroids(assign).collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getDouble(2)))
+  private def harvestTunedCentroids(assign: DataFrame): Seq[TunedCell] =
+    tunedCells(tunedCentroids(assign).collect().toSeq)
+
+  /** One harvested tuned-IVF centroid: (cell, grid centroid, its norm). */
+  private[graft] type TunedCell = (Long, Seq[Long], Double)
+
+  /** (cell, cv, cnrm) centroid rows as [[TunedCell]]s, by cell. */
+  private def tunedCells(rows: Seq[org.apache.spark.sql.Row])
+      : Seq[TunedCell] =
+    rows.map(r => (r.getAs[Long]("cell"),
+      r.getSeq[Long](r.fieldIndex("cv")), r.getAs[Double]("cnrm")))
       .sortBy(_._1)
+
+  /** The centroids of the committed tuned or IVF-PQ artifact at `p`,
+    * harvested once per commit ([[graft.sim.IndexStore.memberRows]]). */
+  private[graft] def tunedCentroidsAt(s: SparkSession, p: String)
+      : Seq[TunedCell] =
+    tunedCells(graft.sim.IndexStore.memberRows(s, p, "centroids"))
+
+  /** Grid cosine of an (`iv`, `nrm`) grid vector against each harvested
+    * centroid: the score the tuned trainer assigns by and its probes
+    * rank by. */
+  private def tunedScores(cents: Seq[TunedCell], iv: Column, nrm: Column)
+      : Seq[(Long, Column)] =
+    cents.map { case (cell, cv, cnrm) =>
+      cell -> gridDot(iv, typedLit(cv)) / (nrm * lit(cnrm)) }
+
+  /** The [[IvfTunedProbe]] cells a (qiv, qnrm) query row probes, best
+    * first: the cells of its [[nearestCells]]. */
+  private[graft] def tunedProbe(cents: Seq[TunedCell]): Column =
+    nearestCells(tunedScores(cents, col("qiv"), col("qnrm")), IvfTunedProbe)
+      .getField("cell").as("probe")
 
   /** [[IvfTunedIters]] Lloyd iterations from the id-modulo init → (trained
     * centroids, trained assignment). Each round HARVESTS the K-row centroid
@@ -919,33 +985,29 @@ object SimilarityPack {
     * [[tunedCentroids]] outputs the broadcast form computed, merely
     * collected (K·Dim longs of metadata, never corpus rows). */
   private def ivfTunedTrain(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    import s.implicits._
+      : (Seq[TunedCell], DataFrame) = {
     val vecs = gridVecs(s, d)
     var cellExpr = col("vec_id") % IvfTunedCells
     for (_ <- 1 to IvfTunedIters)
-      cellExpr = nearestCell(
-        harvestTunedCentroids(vecs.withColumn("cell", cellExpr)).map {
-          case (cell, cv, cnrm) => cell ->
-            gridDot(col("iv"), typedLit(cv)) / (col("nrm") * lit(cnrm))
-        }).getField("cell")
+      cellExpr = nearestCell(tunedScores(
+        harvestTunedCentroids(vecs.withColumn("cell", cellExpr)),
+        col("iv"), col("nrm"))).getField("cell")
     val assign = vecs.withColumn("cell", cellExpr)
-    // the trained centroids are harvested once more and returned as a
-    // LOCAL relation: every consumer broadcasts them (query routing, the
-    // artifact writer), and a lazy aggregate here would re-run the whole
-    // assignment scan inside each consumer's broadcast job
-    (harvestTunedCentroids(assign).toDF("cell", "cv", "cnrm"), assign)
+    // the trained centroids are harvested once more: query routing binds
+    // them as literals and the artifact writers write them as a local
+    // relation, so no consumer re-runs the assignment scan
+    (harvestTunedCentroids(assign), assign)
   }
 
   /** Tuned-IVF top-10 from a trained (vec_id, iv, nrm, cell) assignment and
-    * (cell, cv, cnrm) centroids: queries probe their [[IvfTunedProbe]]
+    * harvested centroids: queries probe their [[IvfTunedProbe]]
     * nearest cells, exact-cosine-rank the union of those cells' members.
     * Candidates stay O(nprobe · cell) — never a corpus×corpus join. */
-  private def tunedRank(assign: DataFrame, cents: DataFrame,
+  private def tunedRank(assign: DataFrame, cents: Seq[TunedCell],
       qs: QuerySet = DefaultQueries): DataFrame =
     tunedRankFor(assign, cents, qs(assign)
       .select(col("vec_id").as("query_id"), col("iv").as("qiv"),
-        col("nrm").as("qnrm")))
+        col("nrm").as("qnrm")), queryBound(qs))
 
   /** [[tunedRank]] for an ARBITRARY (query_id, qiv, qnrm) grid-vector
     * frame — the queries need not be corpus members, which is what the
@@ -953,12 +1015,14 @@ object SimilarityPack {
     * are grid-ified with the same 1e-9 recipe and probe the saved
     * centroids). For corpus members the stored and recomputed grid
     * vectors are identical by construction, so this reproduces the
-    * id-injected path row-for-row (pinned in StreamingSpec). */
-  private def tunedRankFor(assign: DataFrame, cents: DataFrame,
-      q: DataFrame): DataFrame =
-    tunedRankScoredFor(assign, cents, q)
-      .select("query_id", "rank", "neighbor_id")
-      .orderBy("query_id", "rank")
+    * id-injected path row-for-row (pinned in StreamingSpec). `bound`
+    * caps the query count for the [[requestOrder]]; a stream's batch has
+    * none. */
+  private def tunedRankFor(assign: DataFrame, cents: Seq[TunedCell],
+      q: DataFrame, bound: Option[Int]): DataFrame =
+    requestOrder(tunedRankScoredFor(assign, cents, q)
+      .select("query_id", "rank", "neighbor_id"), bound, 10,
+      "query_id", "rank")
 
   /** The gate instantiation of the composed request (exercises the
     * string-parse + clamp + lowercase paths of `_check_index_params`). */
@@ -988,15 +1052,20 @@ object SimilarityPack {
   /** Path-resolved [[composedServe]] — the streaming gate's per-batch
     * half (artifact ensured once at stream start). */
   private[graft] def composedServeAt(s: SparkSession, p: String,
-      ids: DataFrame, prm: graft.api.IndexParams.Params): DataFrame = {
+      ids: DataFrame, prm: graft.api.IndexParams.Params): DataFrame =
+    composedServeWith(s, p, querySetOf(ids), prm)
+
+  /** [[composedServeAt]] over a query set. */
+  private[graft] def composedServeWith(s: SparkSession, p: String,
+      qs: QuerySet, prm: graft.api.IndexParams.Params): DataFrame = {
     // the rank cap IS the clamped n_neighbours — a request above the old
     // fixed 10 must serve up to the probed-cells candidate pool, exactly
     // as the reference index returns n_neighbours items (fewer only when
     // the candidate pool runs out)
     val scored = tunedRankScoredFor(
       member(s, p, "assignments"),
-      member(s, p, "centroids"),
-      querySetOf(ids)(member(s, p, "assignments"))
+      tunedCentroidsAt(s, p),
+      qs(member(s, p, "assignments"))
         .select(col("vec_id").as("query_id"), col("iv").as("qiv"),
           col("nrm").as("qnrm")),
       kCap = prm.nNeighbours)
@@ -1032,30 +1101,23 @@ object SimilarityPack {
         .filter(col("rn") === 1).drop("rn")
       case _ => mapped
     }
-    deduped
-      .select(col("query_id"), col("rec_id"), col("sub_offset"),
-        round(col("dist"), 8).as("dist"))
-      .orderBy("query_id", "dist", "rec_id", "sub_offset")
+    requestOrder(deduped.select(col("query_id"), col("rec_id"),
+        col("sub_offset"), round(col("dist"), 8).as("dist")),
+      queryBound(qs), prm.nNeighbours,
+      "query_id", "dist", "rec_id", "sub_offset")
   }
 
   /** [[tunedRankFor]] keeping the ranking cosine — the serving
     * composition (`n4_serve_composed`) thresholds and sorts on the
     * DISTANCE derived from it, so the score must ride out of the rank
     * stage instead of being recomputed. */
-  private def tunedRankScoredFor(assign: DataFrame, cents: DataFrame,
+  private def tunedRankScoredFor(assign: DataFrame, cents: Seq[TunedCell],
       q: DataFrame, kCap: Int = 10): DataFrame = {
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("cell"))
-    val probes = q
-      .crossJoin(broadcast(cents))
-      .withColumn("score",
-        gridDot(col("qiv"), col("cv")) / (col("qnrm") * col("cnrm")))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= IvfTunedProbe)
-      .select(col("query_id"), col("qiv"), col("qnrm"), col("cell"))
+    val probes = q.select(col("query_id"), col("qiv"), col("qnrm"),
+      tunedProbe(cents))
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    assign.join(broadcast(probes), Seq("cell"))
+    probed(assign, probes)
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (gridDot(col("qiv"), col("iv")) / (col("qnrm") * col("nrm")))
@@ -1261,7 +1323,7 @@ object SimilarityPack {
         col("nrm").as("qnrm"))
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
-    short
+    val top = short
       .join(vecs.withColumnRenamed("vec_id", "neighbor_id"),
         Seq("neighbor_id"))
       .join(broadcast(q), Seq("query_id"))
@@ -1271,7 +1333,7 @@ object SimilarityPack {
       .withColumn("rank", asLong(row_number().over(wRank)))
       .filter(col("rank") <= 10)
       .select("query_id", "rank", "neighbor_id")
-      .orderBy("query_id", "rank")
+    requestOrder(top, queryBound(qs), 10, "query_id", "rank")
   }
 
   // ---- SQ8 scalar quantization (`ann_sq8`) ---------------------------------
@@ -1443,7 +1505,7 @@ object SimilarityPack {
         .join(assign.select(col("vec_id"), col("cell")), Seq("vec_id")), qs)
   }
 
-  /** IVF-PQ top-10 from trained parts: (cell, cv, cnrm) coarse centroids,
+  /** IVF-PQ top-10 from trained parts: harvested coarse centroids,
     * (vec_id, iv, nrm, cell) assignment (vectors + their IVF cell — the
     * re-rank member), (s, code, pos, civ) sub-codebooks and (vec_id, s,
     * code, cell) PQ codes CARRYING their IVF cell. Queries probe their
@@ -1452,23 +1514,15 @@ object SimilarityPack {
     * exact-cosine re-rank. The LUT, probe and shortlist frames are all
     * query-sized broadcasts; the only corpus-proportional work is the
     * pruned code scan — and because the cell rides the codes row (the
-    * artifact is written that way), the probe filter hits the scan as a
-    * broadcast-join prune, with no corpus-wide vec_id join in the query
-    * path. */
-  private def ivfPqRank(cents: DataFrame, assign: DataFrame,
+    * artifact is written that way), the probe join reads the cell off the
+    * code rows, with no corpus-wide vec_id join in the query path. */
+  private def ivfPqRank(cents: Seq[TunedCell], assign: DataFrame,
       pqCent: DataFrame, codes: DataFrame,
       qs: QuerySet = DefaultQueries): DataFrame = {
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("cell"))
     val probes = qs(assign)
       .select(col("vec_id").as("query_id"), col("iv").as("qiv"),
         col("nrm").as("qnrm"))
-      .crossJoin(broadcast(cents))
-      .withColumn("score",
-        gridDot(col("qiv"), col("cv")) / (col("qnrm") * col("cnrm")))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= IvfTunedProbe)
-      .select(col("query_id"), col("cell"))
+      .select(col("query_id"), tunedProbe(cents))
     val cn = pqCent.groupBy(col("s"), col("code"))
       .agg(sum(col("civ") * col("civ")).as("cc"))
     // restrict BEFORE exploding: only the query rows pay the subspace
@@ -1480,8 +1534,7 @@ object SimilarityPack {
       .orderBy(col("score").desc, col("neighbor_id"))
     val qn = qs(assign)
       .select(col("vec_id").as("query_id"), col("nrm").as("qnrm"))
-    val short = codes
-      .join(broadcast(probes), Seq("cell"))
+    val short = probed(codes, probes)
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(lut), Seq("query_id", "s", "code"))
       .join(broadcast(cn), Seq("s", "code"))
@@ -1512,9 +1565,11 @@ object SimilarityPack {
       Tables.embeddings(s, d), "vec_id",
       s"cells=$IvfTunedCells,iters=$IvfTunedIters,sub=$PqSubspaces," +
         s"codes=$PqCodes,pqiters=$PqIters,cap=$KMeansTrainCap") { p =>
+      import s.implicits._
       val (cents, assign) = ivfTunedTrain(s, d)
       val (pqCent, codes) = pqTrain(assign)
-      cents.write.mode("overwrite").parquet(s"$p/centroids")
+      cents.toDF("cell", "cv", "cnrm").write.mode("overwrite")
+        .parquet(s"$p/centroids")
       assign.select("vec_id", "iv", "nrm", "cell").write.mode("overwrite")
         .parquet(s"$p/assignments")
       pqCent.withColumnRenamed("cell", "code").write.mode("overwrite")
@@ -1530,7 +1585,7 @@ object SimilarityPack {
   private def ivfPqServe(s: SparkSession, d: String,
       qs: QuerySet = DefaultQueries): DataFrame = {
     val p = ensureIvfPqIndex(s, d)
-    ivfPqRank(member(s, p, "centroids"),
+    ivfPqRank(tunedCentroidsAt(s, p),
       member(s, p, "assignments"),
       member(s, p, "codebooks"),
       member(s, p, "codes"), qs)
@@ -1548,8 +1603,10 @@ object SimilarityPack {
       Tables.embeddings(s, d), "vec_id",
       s"cells=$IvfTunedCells,iters=$IvfTunedIters,cap=$KMeansTrainCap") {
       p =>
+      import s.implicits._
       val (cents, assign) = ivfTunedTrain(s, d)
-      cents.write.mode("overwrite").parquet(s"$p/centroids")
+      cents.toDF("cell", "cv", "cnrm").write.mode("overwrite")
+        .parquet(s"$p/centroids")
       assign.select("vec_id", "iv", "nrm", "cell").write.mode("overwrite")
         .parquet(s"$p/assignments")
     }
@@ -1560,11 +1617,11 @@ object SimilarityPack {
     * (plan-asserted in IndexStoreSpec; the only corpus touch is the
     * freshness fingerprint). Results are identical to [[ivfTunedTopk]] by
     * construction, which is what the shared oracle checks. */
-  private def ivfTunedServe(s: SparkSession, d: String,
+  private[graft] def ivfTunedServe(s: SparkSession, d: String,
       qs: QuerySet = DefaultQueries): DataFrame = {
     val p = ensureTunedIndex(s, d)
     tunedRank(member(s, p, "assignments"),
-      member(s, p, "centroids"), qs)
+      tunedCentroidsAt(s, p), qs)
   }
 
   /** Serve arbitrary (possibly unseen) query VECTORS from the persisted
@@ -1580,8 +1637,8 @@ object SimilarityPack {
     val q = batch
       .select(col("vec_id").as("query_id"), gridVec(col("embedding")).as("qiv"))
       .withColumn("qnrm", sqrt(gridDot(col("qiv"), col("qiv"))))
-    tunedRankFor(member(s, p, "assignments"),
-      member(s, p, "centroids"), q)
+    tunedRankFor(member(s, p, "assignments"), tunedCentroidsAt(s, p), q,
+      None)
   }
 
   // ---- clustered-corpus pruning proof (`ann_clustered_recall`) -----------
@@ -1698,24 +1755,21 @@ object SimilarityPack {
     * all query-/vector-partitioned; candidates stay O(probed cells ·
     * members), never a corpus×corpus join. */
   private def clusteredRecall(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     // reused by seeding, assignment, buckets, queries and the exact rank —
     // materialize once (same discipline as ann_recall's exact anchor)
     val corpus = Checkpointed("SimilarityPack.clustered.corpus",
       clusteredVecs(s, d))
     val seeds = gonzalezSeeds(s, corpus, d)
-    val sdf = broadcast(seeds.toDF("cell", "sv"))
-    // nearest seed by exact-integer 2·dot − ‖s‖² (ties → lower cell id)
-    def seedScore = lit(2.0) * gridDot(col("v"), col("sv")) -
-      gridDot(col("sv"), col("sv"))
-    // nearest-seed assignment: the seeds are driver values already, so
-    // the same score binds them as [[nearestCell]] literals (‖s‖² < 2^31
-    // is exact as a driver double) — a map-side column, no exchange
-    val assign = corpus.withColumn("cell", nearestCell(seeds.map {
-      case (cell, sv) => cell ->
-        (lit(2.0) * gridDot(col("cv"), typedLit(sv.toSeq)) -
-          lit(sv.map(x => x * x).sum.toDouble))
-    }).getField("cell"))
+    // nearest seed by exact-integer 2·dot − ‖s‖² (ties → lower cell id):
+    // the seeds are driver values already, so the score binds them as
+    // [[nearestCells]] literals (‖s‖² < 2^31 is exact as a driver
+    // double) — a map-side column, no exchange, for the assignment and
+    // the probes alike
+    def seedScores(v: Column) = seeds.map { case (cell, sv) => cell ->
+      (lit(2.0) * gridDot(v, typedLit(sv.toSeq)) -
+        lit(sv.map(x => x * x).sum.toDouble)) }
+    val assign = corpus.withColumn("cell",
+      nearestCell(seedScores(col("cv"))).getField("cell"))
     // the monitor's seeded query sample (F19 hash-order recipe, own seed)
     val qids = corpus.select(col("vec_id"))
       .orderBy(md5(concat(lit("cseed17:"), col("vec_id").cast(StringType))),
@@ -1737,13 +1791,10 @@ object SimilarityPack {
       // anchor for both hit joins (≤ 10·ClusSampleN rows)
       .transform(df => Checkpointed("SimilarityPack.clustered.exact", df))
     // IVF probe: top-ClusProbe cells per query, same integer metric
-    val wP = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("cell"))
-    val probes = q.withColumnRenamed("qv", "v").crossJoin(sdf)
-      .withColumn("score", seedScore)
-      .withColumn("rn", row_number().over(wP)).filter(col("rn") <= ClusProbe)
-      .select(col("query_id"), col("cell"))
-    val candIvf = assign.join(broadcast(probes), Seq("cell"))
+    val probes = q.select(col("query_id"),
+      nearestCells(seedScores(col("qv")), ClusProbe).getField("cell")
+        .as("probe"))
+    val candIvf = probed(assign, probes)
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cv"))
     // multi-table sign-LSH candidates: integer plane dots (w = v − 2^23
@@ -1921,14 +1972,14 @@ object SimilarityPack {
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
-    emb.join(broadcast(cand), col("vec_id") === col("neighbor_id"))
+    val top = emb.join(broadcast(cand), col("vec_id") === col("neighbor_id"))
       .join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosine(col("qv"), col("v")).as("cosine"))
       .withColumn("rank", row_number().over(w).cast(LongType))
       .filter(col("rank") <= 10)
       .select("query_id", "rank", "neighbor_id")
-      .orderBy("query_id", "rank")
+    requestOrder(top, queryBound(qs), 10, "query_id", "rank")
   }
 
   /** Persisted multi-table LSH index, named like the reference's index
@@ -1989,14 +2040,14 @@ object SimilarityPack {
       }
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
-    emb.join(broadcast(q),
+    val top = emb.join(broadcast(q),
         col("bucket") === col("probe") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("qv"), col("v")).as("cosine"))
       .withColumn("rank", row_number().over(w).cast(LongType))
       .filter(col("rank") <= 10)
       .select("query_id", "rank", "neighbor_id")
-      .orderBy("query_id", "rank")
+    requestOrder(top, queryBound(qs), 10, "query_id", "rank")
   }
 
   /** SQL query-set predicate, alias → condition — the oracle-side mirror

@@ -36,8 +36,11 @@ import org.apache.spark.sql.functions._
   * bare `read.parquet`. Parquet schema inference is a Spark job of its
   * own, so each member's schema is resolved once per committed artifact
   * and every later read binds it (`read.schema(…)`); a warm serve path
-  * then reads its members without launching a job. The schema memo for a
-  * path is dropped on every commit and wherever the freshness memo is.
+  * then reads its members without launching a job. K-row metadata
+  * members (an index's centroids) are harvested the same way, once per
+  * committed artifact ([[memberRows]]), and bind into serve plans as
+  * literals. Both memos for a path are dropped on every commit and
+  * wherever the freshness memo is.
   */
 object IndexStore {
 
@@ -144,7 +147,7 @@ object IndexStore {
     * scanned-fallback behavior from a known-cold state. */
   private[graft] def resetFingerprintMemo(): Unit = {
     fpMemo.synchronized { fpMemo.clear() }; freshMemo.clear()
-    schemaMemo.clear()
+    schemaMemo.clear(); rowsMemo.clear()
   }
 
   /** Last (stamp, params hash, build time) this session RESOLVED per
@@ -165,12 +168,17 @@ object IndexStore {
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
-  /** Drop this session's freshness stamp and member schemas for the
-    * artifact at `p`: the next construction re-proves the artifact and
-    * re-resolves its members. */
+  /** Collected rows per member path, for [[memberRows]]. */
+  private val rowsMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, Seq[org.apache.spark.sql.Row]]()
+
+  /** Drop this session's freshness stamp, member schemas and harvested
+    * member rows for the artifact at `p`: the next construction re-proves
+    * the artifact and re-reads its members. */
   private def forget(p: String): Unit = {
     freshMemo.remove(p)
     schemaMemo.keySet.removeIf(_.startsWith(s"$p/"))
+    rowsMemo.keySet.removeIf(_.startsWith(s"$p/"))
   }
 
   /** Member `name` of the committed artifact at `p` (a path one of the
@@ -181,6 +189,15 @@ object IndexStore {
     s.read.schema(schemaMemo.computeIfAbsent(m, _ => s.read.parquet(m).schema))
       .parquet(m)
   }
+
+  /** The rows of member `name` of the committed artifact at `p`, collected
+    * once per commit: only for members that are K-row metadata by
+    * construction (an index's centroids), which serve paths bind in as
+    * literals instead of joining. */
+  def memberRows(s: SparkSession, p: String, name: String)
+      : Seq[org.apache.spark.sql.Row] =
+    rowsMemo.computeIfAbsent(s"$p/$name",
+      _ => member(s, p, name).collect().toSeq)
 
   /** Stable hash of a builder's PARAMETER string (md5 head, so it does not
     * depend on JVM hashCode stability). The corpus fingerprint only covers

@@ -618,4 +618,32 @@ class IndexStoreSpec extends SparkSpec {
     assert(served.as[(String, Long, Double)].collect().toSeq ==
       Seq(("v2", 2L, 2.5)))
   }
+
+  test("a rebuild on a changed corpus re-harvests centroids: probes score " +
+    "the new ones") {
+    import spark.implicits._
+    import operators.SimilarityPack
+    val emb = Tables.embeddings(spark, sfTiny)
+    val params = s"harvest=${System.nanoTime()}"
+    val name = "centroid_memo_probe"
+    def build(cents: Seq[(Long, Seq[Long], Double)])(q: String): Unit =
+      cents.toDF("cell", "cv", "cnrm").coalesce(1).write.mode("overwrite")
+        .parquet(s"$q/centroids")
+    val (x, y) = (Seq(1L, 0L), Seq(0L, 1L))
+    // one query on the y axis: it probes the cell whose centroid is y first
+    val q = Seq((0L, Seq(0L, 5L), 5.0)).toDF("query_id", "qiv", "qnrm")
+    def probed(p: String): Seq[Long] =
+      q.select(SimilarityPack.tunedProbe(
+        SimilarityPack.tunedCentroidsAt(spark, p))).head().getSeq[Long](0)
+    val p1 = IndexStore.ensure(spark, sfTiny, name,
+      emb.filter($"vec_id" < 100), "vec_id", params)(
+      build(Seq((1L, x, 1.0), (2L, y, 1.0))))
+    assert(probed(p1) == Seq(2L, 1L))
+    // the corpus changes: the gate rebuilds at the SAME path with the
+    // centroids swapped, and the probes follow them
+    val p2 = IndexStore.ensure(spark, sfTiny, name, emb, "vec_id", params)(
+      build(Seq((1L, y, 1.0), (2L, x, 1.0))))
+    assert(p2 == p1)
+    assert(probed(p2) == Seq(1L, 2L))
+  }
 }

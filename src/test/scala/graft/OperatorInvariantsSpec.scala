@@ -216,6 +216,49 @@ class OperatorInvariantsSpec extends SparkSpec {
     }
   }
 
+  test("top-n probe kernel: nearestCells keeps exactly the cells a " +
+    "row_number window over (score desc, cell) keeps, and n = 1 is " +
+    "nearestCell") {
+    // the nearest-centroid fixture above: identical centroids in both
+    // listing orders, a raw-score tie, one centroid, no centroids
+    import operators.SimilarityPack.{nearestCell, nearestCells}
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val v = Seq(Seq(1.0, 2.0, 0.0)).toDF("v")
+    val c = Seq(1.0, 1.0, 0.0)
+    def cos(cv: Seq[Double]) =
+      graft.functions.VectorFunctions.cosine(col("v"), typedLit(cv))
+    val fixtures = Seq(
+      "identical centroids" -> Seq(7L -> cos(c), 3L -> cos(c)),
+      "identical centroids, reversed" -> Seq(3L -> cos(c), 7L -> cos(c)),
+      "nearer centroid" -> Seq(3L -> cos(c), 7L -> cos(Seq(1.0, 2.0, 0.0)),
+        5L -> cos(c)),
+      "raw-score tie" -> Seq(5L -> lit(1.0), 2L -> lit(1.0), 1L -> lit(0.5),
+        4L -> lit(0.5), 9L -> lit(1.0)),
+      "one centroid" -> Seq(9L -> cos(c)),
+      "no centroids" -> Seq.empty[(Long, org.apache.spark.sql.Column)])
+    for ((what, cells) <- fixtures; n <- 1 to 4) {
+      val got = Option(v.select(nearestCells(cells, n).getField("cell"))
+        .head().getSeq[Long](0)).getOrElse(Seq.empty)
+      // the probe window the kernel replaced, over one row per cell
+      val rows = if (cells.isEmpty) Seq.empty[Long] else v
+        .select(explode(array(cells.map { case (cell, score) =>
+          struct(lit(cell).as("cell"), score.as("score")) }: _*)).as("c"))
+        .select(lit(0).as("q"), col("c.cell"), col("c.score"))
+        .withColumn("rn", row_number().over(Window.partitionBy("q")
+          .orderBy(col("score").desc, col("cell"))))
+        .filter(col("rn") <= n).orderBy("rn").as[(Int, Long, Double, Int)]
+        .collect().map(_._2).toSeq
+      assert(got == rows, s"$what, n = $n")
+    }
+    // n = 1 takes greatest, not the sort: the same winner either way
+    for ((what, cells) <- fixtures) {
+      val one = v.select(nearestCell(cells), nearestCells(cells, 1)(0),
+        nearestCells(cells, 4)(0)).head()
+      assert(one.get(0) == one.get(1) && one.get(1) == one.get(2), what)
+    }
+  }
+
   test("dd_incremental_lsh flags only batch docs against verified corpus matches") {
     import graft.functions.HashFunctions._
     import operators.DedupPack

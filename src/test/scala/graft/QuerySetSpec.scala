@@ -162,4 +162,84 @@ class QuerySetSpec extends SparkSpec {
     assert(plan.contains("SelectedBucketsCount: 3 out of 32"),
       s"query-side scan not bucket-pruned:\n$plan")
   }
+
+  test("a warm request runs at most three Spark jobs on each serving path") {
+    // exact 5 → 3, tuned IVF and composed 7 → 3: the probes are a
+    // map-side kernel over harvested centroids, and the bounded request
+    // order plans no range sort
+    val p = SimilarityPack.ensureTunedIndex(spark, sfTiny)
+    val ids = Seq(3L, 17L, 42L).toDF("vec_id")
+    val paths = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "topkFor" -> (() => SimilarityPack.topkFor(spark, sfTiny, ids)),
+      "indexedTopkFor" ->
+        (() => SimilarityPack.indexedTopkFor(spark, sfTiny, ids)),
+      "composedServeAt" -> (() => SimilarityPack.composedServeAt(spark, p,
+        ids, SimilarityPack.ComposedDefaultParams)))
+    for ((what, frame) <- paths) {
+      frame().collect() // warm: artifact, member schemas, centroids
+      val g = s"serve-jobs-$what-${System.nanoTime()}"
+      val jobs = jobGroupsDuring(g)(frame().collect()).count(_ == g)
+      assert(jobs <= 3, s"$what launched $jobs Spark jobs")
+    }
+  }
+
+  test("a warm request with new ids compiles no generated classes") {
+    // the ids reach the filter as an InSet (Engine), whose generated code
+    // reads the set as a reference, not as inlined literals
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val p = SimilarityPack.ensureTunedIndex(spark, sfTiny)
+    def serve(ids: Seq[Long]): Unit = {
+      val req = ids.toDF("vec_id")
+      SimilarityPack.topkFor(spark, sfTiny, req).collect()
+      SimilarityPack.indexedTopkFor(spark, sfTiny, req).collect()
+      SimilarityPack.composedServeAt(spark, p, req,
+        SimilarityPack.ComposedDefaultParams).collect()
+    }
+    serve(Seq(3L, 17L, 42L))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    serve(Seq(5L, 211L, 318L, 407L))
+    serve(Seq(8L, 99L))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before)
+  }
+
+  test("a request of every corpus id keeps every row, in the order of " +
+    "the unbounded sort") {
+    val all = Tables.embeddings(spark, sfTiny).select("vec_id")
+      .limit(SimilarityPack.QuerySetMax)
+    val bounded = SimilarityPack.querySetOf(all)
+    // the same ids behind a plain selector: no bound, so a plain sort
+    val plain: SimilarityPack.QuerySet = df => bounded(df)
+    val p = SimilarityPack.ensureTunedIndex(spark, sfTiny)
+    val prm = SimilarityPack.ComposedDefaultParams
+    val paths = Seq[(String, SimilarityPack.QuerySet =>
+        org.apache.spark.sql.DataFrame)](
+      "exact" -> (qs => SimilarityPack.topkExact(spark, sfTiny, qs)),
+      "ivf" -> (qs => SimilarityPack.ivfTunedServe(spark, sfTiny, qs)),
+      "composed" -> (qs => SimilarityPack.composedServeWith(spark, p, qs,
+        prm)))
+    for ((what, frame) <- paths) {
+      val top = frame(bounded)
+      val got = top.collect().map(_.toString).toSeq
+      assert(got.nonEmpty && got == frame(plain).collect().map(_.toString)
+        .toSeq, what)
+      val plan = top.queryExecution.executedPlan.toString
+      assert(plan.contains("TakeOrderedAndProject"),
+        s"$what: the bounded order did not plan a top-n:\n$plan")
+    }
+  }
+
+  test("serveTunedBatch serves a batch larger than QuerySetMax whole") {
+    import graft.streaming.QueryStream
+    // three copies of the corpus under distinct ids: unseen vectors, as
+    // a stream delivers them, and more of them than a harvested set holds
+    val emb = Tables.embeddings(spark, sfTiny).select("vec_id", "embedding")
+    val batch = (0 until 3).map(i => emb.select(
+      (col("vec_id") + i * 1000000L).as("vec_id"), col("embedding")))
+      .reduce(_ union _)
+    val n = batch.count()
+    assert(n > SimilarityPack.QuerySetMax)
+    val out = QueryStream.serveTunedBatch(spark, sfTiny, batch)
+    assert(out.count() == 10 * n)
+    assert(out.select("query_id").distinct().count() == n)
+  }
 }
