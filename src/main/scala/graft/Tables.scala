@@ -57,7 +57,7 @@ object Tables {
     s"graft_${name}_" + Integer.toHexString(dir.hashCode)
 
   /** Per-table materialization locks: DIFFERENT tables (and the same
-    * table under different dirs) build concurrently — Bench's prepare
+    * table under different dirs) build concurrently — SparkEntry.prepare
     * fans the layout builds out across threads — while two threads racing
     * the SAME table serialize on its lock and the loser sees the catalog
     * entry and skips. A global lock here would serialize the whole
@@ -71,7 +71,7 @@ object Tables {
   /** Materialize-once bucketed layout: first touch per (dir, session)
     * writes the table bucketed+sorted by its key, every later touch is a
     * catalog read. Locked per table: Verify drives queries from 8 threads
-    * and Bench's prepare builds layouts concurrently. */
+    * and SparkEntry.prepare builds layouts concurrently. */
   private def bucketed(s: SparkSession, dir: String, name: String): DataFrame = {
     val tbl = ident(dir, name)
     lockFor(tbl).synchronized {
@@ -86,15 +86,10 @@ object Tables {
     }
   }
 
-  /** Materialize every fact table's layout up front — Bench calls this
-    * before the timed loop (the layout is ingest-time work, not query
-    * work) and Verify before its concurrent drive. */
-  def prepare(s: SparkSession, dir: String): Unit =
-    prepareUnits(s, dir).foreach(_.apply())
-
-  /** The independent per-table units of [[prepare]] — Bench flattens them
-    * into its prepare thread pool so layout builds overlap with index
-    * builds instead of paying the serial sum. */
+  /** One unit per fact table that materializes its layout up front (the
+    * layout is ingest-time work, not query work). SparkEntry.prepare
+    * fans them out with the artifact builds, so layout writes overlap
+    * with index builds instead of paying the serial sum. */
   def prepareUnits(s: SparkSession, dir: String): Seq[() => Unit] =
     bucketKeys.keys.toSeq.sorted.map(n => () => { bucketed(s, dir, n); () }) :+
       (() => { eventsPartitioned(s, dir); () })

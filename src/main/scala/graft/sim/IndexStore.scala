@@ -175,7 +175,7 @@ object IndexStore {
   /** Drop this session's freshness stamp, member schemas and harvested
     * member rows for the artifact at `p`: the next construction re-proves
     * the artifact and re-reads its members. */
-  private def forget(p: String): Unit = {
+  private[graft] def forget(p: String): Unit = {
     freshMemo.remove(p)
     schemaMemo.keySet.removeIf(_.startsWith(s"$p/"))
     rowsMemo.keySet.removeIf(_.startsWith(s"$p/"))
@@ -289,7 +289,7 @@ object IndexStore {
     }
 
   /** Per-artifact-path build locks: DIFFERENT artifacts build concurrently
-    * (Bench's prepare fans the 14 artifact families out across threads;
+    * (SparkEntry.prepare fans the artifact families out across threads;
     * each build underuses the cores on its own), while two threads racing
     * the SAME artifact still serialize and the loser sees a fresh manifest
     * and skips. A global lock here would serialize the whole prepare fan-
@@ -547,7 +547,7 @@ object IndexStore {
     * scanned corpus [[fingerprint]]. `params` is the builder's constant
     * string (see [[paramsHash]]) — pass every constant the member layout
     * depends on. Locked per artifact path — Verify drives queries from 8
-    * threads and Bench's prepare builds store families concurrently;
+    * threads and SparkEntry.prepare builds families concurrently;
     * cross-PROCESS writers are handled by the atomic-rename commit
     * ([[commitBuild]]). */
   def ensure(s: SparkSession, dir: String, name: String, corpus: DataFrame,

@@ -16,7 +16,7 @@ object PlanDump {
     val Array(d, outDir, tag) = args.take(3)
     val spark = graft.Engine.session(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-    graft.Tables.prepare(spark, d)
+    graft.SparkEntry.prepare(spark, Seq(d))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (q <- args.drop(3)) {
       val df = graft.SparkEntry.queries(q)(spark, d)

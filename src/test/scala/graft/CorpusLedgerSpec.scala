@@ -99,4 +99,25 @@ class CorpusLedgerSpec extends SparkSpec {
       intercept[Exception] { CorpusLedger.version(spark, sfTiny) }
     } finally spark.conf.unset(CorpusLedger.DirKey)
   }
+
+  test("the n1_popstats family builds under a ledger and nothing without " +
+    "one; after it, n1_incremental builds nothing") {
+    import operators.SimilarityPack.ensurePopStats
+    spark.conf.unset(CorpusLedger.DirKey)
+    val b0 = IndexStore.buildsRun.get()
+    assert(ensurePopStats(spark, sfTiny).isEmpty)
+    assert(IndexStore.buildsRun.get() == b0, "no ledger, no build")
+    val ledgerDir = java.nio.file.Files
+      .createTempDirectory("graft_popstats_ledger").toString
+    // a version no earlier run stamped: the family must build once
+    stampLedger(System.currentTimeMillis() * 1000, ledgerDir)
+    spark.conf.set(CorpusLedger.DirKey, ledgerDir)
+    try {
+      assert(ensurePopStats(spark, sfTiny).isDefined)
+      assert(IndexStore.buildsRun.get() == b0 + 1)
+      SparkEntry.queries("n1_incremental")(spark, sfTiny).collect()
+      assert(IndexStore.buildsRun.get() == b0 + 1,
+        "n1_incremental must serve the stats the family built")
+    } finally spark.conf.unset(CorpusLedger.DirKey)
+  }
 }

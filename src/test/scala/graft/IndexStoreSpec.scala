@@ -154,7 +154,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("concurrent ensure on the same artifact builds exactly once") {
-    // the per-path lock contract behind Bench's prepare fan-out: racing
+    // the per-path lock contract behind the prepare fan-out: racing
     // threads on ONE artifact serialize, the losers see the winner's
     // fresh manifest and skip the build (a nanoTime params salt forces
     // exactly one rebuild per test run under the stable root)
@@ -645,5 +645,45 @@ class IndexStoreSpec extends SparkSpec {
       build(Seq((1L, y, 1.0), (2L, x, 1.0))))
     assert(p2 == p1)
     assert(probed(p2) == Seq(1L, 2L))
+  }
+
+  test("coverage gate: after SparkEntry.prepare no query builds an " +
+    "artifact") {
+    import java.nio.file.{Files, Paths}
+    // layouts and artifact paths key on the corpus dir, so a copy of
+    // sfTiny starts with neither: every artifact a query serves from must
+    // come from a SparkEntry.artifacts family, or it builds below
+    val src = Paths.get(sfTiny)
+    val copy = Files.createTempDirectory("graft_coverage")
+    val files = Files.list(src)
+    try files.forEach(f => Files.copy(f, copy.resolve(f.getFileName)))
+    finally files.close()
+    val d = copy.toString
+    val root = new org.apache.hadoop.fs.Path(IndexStore.path(d, "x")).getParent
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def built(): Set[String] =
+      if (!fs.exists(root)) Set.empty
+      else fs.listStatus(root).map(_.getPath.getName).toSet
+    try {
+      SparkEntry.prepare(spark, Seq(d))
+      val prepared = built()
+      val builders = SparkEntry.queries.toSeq.sortBy(_._1).filter {
+        case (_, fn) =>
+          val b0 = IndexStore.buildsRun.get()
+          fn(spark, d).write.format("noop").mode("overwrite").save()
+          val b = IndexStore.buildsRun.get() != b0
+          // roll a build back, so every later user of the family is named
+          for (name <- built() -- prepared; p = IndexStore.path(d, name)) {
+            fs.delete(new org.apache.hadoop.fs.Path(p), true)
+            IndexStore.forget(p)
+          }
+          b
+      }.map(_._1)
+      assert(builders.isEmpty, "queries that built an artifact after " +
+        s"prepare: ${builders.mkString(", ")}")
+    } finally {
+      fs.delete(root, true)
+      org.apache.commons.io.FileUtils.deleteDirectory(copy.toFile)
+    }
   }
 }

@@ -11,12 +11,11 @@ tolerance means an optimization that must be banked so it cannot silently
 regress later.
 
 Manifest convention (src/test/resources/shuffle_bytes_manifest.tsv):
-recorded at sf0.1 with a SEQUENTIAL drive and a FRESH index root, so
-memoized artifact-build stages have deterministic per-query attribution:
+recorded at sf0.1 with a FRESH index root, so every artifact family
+builds in the drive:
 
     rm -rf /tmp/graft_idx_ratchet
-    GRAFT_VERIFY_THREADS=1 \
-      SPARK_GRAFT_INDEX_ROOT=/tmp/graft_idx_ratchet SPARK_GRAFT_CPUS=32 \
+    SPARK_GRAFT_INDEX_ROOT=/tmp/graft_idx_ratchet SPARK_GRAFT_CPUS=32 \
       java ... graft.Verify /root/testdata/sf0.1 /tmp/verify_ratchet
     python3 tools/shuffle_ratchet.py /tmp/verify_ratchet --regen
 
@@ -31,7 +30,17 @@ verify_spill.json from its job-group ledger, tools.JobLedger; its
 and a gate run REFUSES a capture whose setting differs from the banked
 pin instead of reporting nonsense byte deltas.
 
-Gate run (same drive, no --regen):
+Every family build runs before the queries, in SparkEntry.prepare, under
+its own `artifact:<name>` job group, so the manifest has one row per
+family beside the query rows and a build is never billed to the query
+that first reaches it. So Verify's default 8-thread drive bills what a
+sequential one does, and a subset drive is gateable: there a
+manifest query row is required only when the capture's
+verify_summary.json lists that query. A full drive lists every query, so
+there every absent row still fails (a retired query too). `artifact:`
+rows are always required: every fresh-root drive builds every family.
+
+Gate run (same drive, no --regen; a subset drive gates the same way):
 
     python3 tools/shuffle_ratchet.py /tmp/verify_ratchet
 
@@ -92,6 +101,17 @@ if not os.path.exists(MANIFEST):
 
 old = ratchet_lib.load_manifest(MANIFEST, int)
 pin = old.pop(PIN_ROW, None)
+# A subset drive (verify_summary.json's `subset`) is gated on the queries
+# it lists plus every artifact row; a full drive on every manifest row.
+summary_path = os.path.join(out_dir, "verify_summary.json")
+summary = {}
+if os.path.exists(summary_path):
+    with open(summary_path) as f:
+        summary = json.load(f)
+if summary.get("subset"):
+    listed = set(summary.get("queries", {}))
+    old = {q: v for q, v in old.items()
+           if q in listed or q.startswith("artifact:")}
 if pin is not None and cap_par != pin:
     print(f"FAIL: capture parallelism {cap_par} != manifest pin {pin} — "
           "shuffle bytes are only comparable at the pinned setting; "
@@ -99,7 +119,7 @@ if pin is not None and cap_par != pin:
           "and bank the new pin in the same diff)")
     sys.exit(1)
 
-# A manifest query ABSENT from the capture is always an explicit failure
+# A required manifest row ABSENT from the capture is an explicit failure
 # (ADVICE r16: the old `fresh.get(q, 0)` let small-shuffle queries vanish
 # silently whenever old_bytes <= ~TOL*SLACK). Absence means either a
 # retired query (gone from SparkEntry.queries) or shuffle bytes dropping
