@@ -22,10 +22,6 @@ object Exprs {
   /** Deterministic sum of a double column: exact decimal sum, cast to double. */
   def dsum(c: Column): Column = sum(dec(c)).cast(DoubleType)
 
-  /** Deterministic sum of a product of two double columns. */
-  def dsumProd(a: Column, b: Column): Column =
-    sum(dec(a) * dec(b)).cast(DoubleType)
-
   /** Deterministic average: exact decimal sum divided (in double) by count. */
   def davg(c: Column): Column = dsum(c) / count(c)
 

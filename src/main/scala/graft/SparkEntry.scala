@@ -45,50 +45,55 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     packs.map(_._2).reduce(_ ++ _)
 
+  final case class Family(name: String, ensure: (SparkSession, String) => Any, parents: String*)
+
   /** Every persisted artifact family a query serves from, by the name its
     * build is billed to (job group `artifact:<name>`) and perfbench reports
-    * it under. [[prepare]] builds them all, so adding a family is one line
-    * (IndexStoreSpec's coverage gate fails on a query that builds after
-    * [[prepare]]). `n1_popstats` builds only under a corpus ledger. */
-  val artifacts: Seq[(String, (SparkSession, String) => Any)] = Seq(
-    "lsh" -> operators.SimilarityPack.ensureLshIndex,
-    "kmeans" -> operators.SimilarityPack.ensureKmeansIndex,
-    "tuned" -> operators.SimilarityPack.ensureTunedIndex,
-    "pq" -> operators.SimilarityPack.ensurePqIndex,
-    "ivfpq" -> operators.SimilarityPack.ensureIvfPqIndex,
-    "sq8" -> operators.SimilarityPack.ensureSq8Index,
-    "n1_popstats" -> operators.SimilarityPack.ensurePopStats,
-    "bm25" -> operators.TextPack.ensureBm25Index,
-    "stats_ledger" -> operators.StatsPack.ensureStatsLedger,
-    "band" -> operators.DedupPack.ensureBandIndex,
-    "lm" -> operators.TextPack.ensureLmIndex,
-    "bigram_lm" -> operators.TextPack.ensureBigramLmIndex,
-    "bpe" -> operators.TextPack.ensureBpeIndex,
-    "components" -> operators.PipelinePack.ensureComponentsIndex,
-    "stats_cache" -> operators.StatsPack.ensureStatsCache)
+    * it under, with the families whose committed members it reads (a
+    * parent names none). [[prepare]] builds them all, so adding a family
+    * is one line (IndexStoreSpec's coverage gate fails on a query that
+    * builds after [[prepare]]). `n1_popstats` needs a corpus ledger. */
+  val artifacts: Seq[Family] = Seq(
+    Family("lsh", operators.SimilarityPack.ensureLshIndex),
+    Family("kmeans", operators.SimilarityPack.ensureKmeansIndex),
+    Family("tuned", operators.SimilarityPack.ensureTunedIndex),
+    Family("pq", operators.SimilarityPack.ensurePqIndex),
+    Family("ivfpq", operators.SimilarityPack.ensureIvfPqIndex, "tuned", "pq"),
+    Family("sq8", operators.SimilarityPack.ensureSq8Index),
+    Family("n1_popstats", operators.SimilarityPack.ensurePopStats),
+    Family("bm25", operators.TextPack.ensureBm25Index),
+    Family("stats_ledger", operators.StatsPack.ensureStatsLedger),
+    Family("band", operators.DedupPack.ensureBandIndex),
+    Family("lm", operators.TextPack.ensureLmIndex),
+    Family("bigram_lm", operators.TextPack.ensureBigramLmIndex, "lm"),
+    Family("bpe", operators.TextPack.ensureBpeIndex),
+    Family("components", operators.PipelinePack.ensureComponentsIndex),
+    Family("stats_cache", operators.StatsPack.ensureStatsCache))
 
   /** A drive's build-once work over `dirs`: the fact-table layouts
-    * ([[Tables.prepareUnits]]) and every [[artifacts]] family. The units
-    * are independent (Tables and IndexStore lock per table and per path),
-    * so they fan out over a pool of 8: one build underuses the cores, and
-    * 8 keeps per-build memory headroom. Each unit sets its own job group
-    * (`prepare` for layouts, `artifact:<name>`), so the ledger bills a
-    * build to its family, never to the first query that reaches it. A
-    * failed unit is logged and surfaces as its query's failure. */
+    * ([[Tables.prepareUnits]]) and every [[artifacts]] family, fanned out
+    * over a pool of 8 (one build underuses the cores; 8 keeps per-build
+    * memory headroom). Each unit sets its own job group (`prepare` for
+    * layouts, `artifact:<name>`), so the ledger bills a build to its
+    * family, never to the first query that reaches it. Children run in a
+    * second wave: a child's build ensures its parents, so beside them it
+    * could win a parent's lock and bill the parent's build to itself.
+    * A failed unit is logged and surfaces as its query's failure. */
   def prepare(spark: SparkSession, dirs: Seq[String]): Unit = {
-    val units: Seq[(String, () => Any)] =
-      dirs.flatMap(d => Tables.prepareUnits(spark, d).map("prepare" -> _)) ++
-        (for (d <- dirs; (name, ensure) <- artifacts)
-          yield s"artifact:$name" -> (() => ensure(spark, d)))
+    def units(children: Boolean): Seq[(String, () => Any)] =
+      for (d <- dirs; f <- artifacts if f.parents.nonEmpty == children)
+        yield s"artifact:${f.name}" -> (() => f.ensure(spark, d))
+    val layouts = dirs.flatMap(Tables.prepareUnits(spark, _).map("prepare" -> _))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try units.map { case (group, unit) => pool.submit(new Runnable {
-      def run(): Unit = {
-        spark.sparkContext.setJobGroup(group, group)
-        try unit() catch { case e: Throwable =>
-          System.err.println(s"[prepare] $group failed: $e")
-        } finally spark.sparkContext.clearJobGroup()
-      }
-    }) }.foreach(_.get())
+    try for (wave <- Seq(layouts ++ units(false), units(true)))
+      wave.map { case (group, unit) => pool.submit(new Runnable {
+        def run(): Unit = {
+          spark.sparkContext.setJobGroup(group, group)
+          try unit() catch { case e: Throwable =>
+            System.err.println(s"[prepare] $group failed: $e")
+          } finally spark.sparkContext.clearJobGroup()
+        }
+      }) }.foreach(_.get())
     finally pool.shutdown()
   }
 }

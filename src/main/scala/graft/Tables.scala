@@ -53,7 +53,7 @@ object Tables {
 
   /** Catalog identifier for `name`'s materialized layout under `dir`
     * (hex of the dir hash keeps names per-scale-factor). */
-  private def ident(dir: String, name: String): String =
+  private[graft] def ident(dir: String, name: String): String =
     s"graft_${name}_" + Integer.toHexString(dir.hashCode)
 
   /** Per-table materialization locks: DIFFERENT tables (and the same

@@ -558,8 +558,8 @@ object SimilarityPack {
     //      in IndexStoreSpec. See the SQ8 scaladoc. ------------------------
     "ann_sq8" -> ((s, d) => sq8Serve(s, d)),
 
-    // ---- persisted IVF-PQ (IVFADC): both trainings are the build half;
-    //      queries serve from centroids + codebooks + codes + assignment —
+    // ---- persisted IVF-PQ (IVFADC): the tuned and PQ parents' trainings
+    //      are the build half; queries serve from their members + codes —
     //      the composed memory-AND-compute 100 TB serving shape. The
     //      inline trainer anchor (ann_ivfpq) retired in the r15 audit —
     //      this row carries the full composed-chain oracle now, with the
@@ -894,6 +894,10 @@ object SimilarityPack {
   private[graft] val IvfTunedIters = 6
   private[graft] val IvfTunedProbe = 8
 
+  /** Build constants of [[ensureTunedIndex]]. */
+  private[graft] val TunedIndexParams =
+    s"cells=$IvfTunedCells,iters=$IvfTunedIters,cap=$KMeansTrainCap"
+
   /** Embedding on the exact 1e-9 integer grid (`array<long>`) — same grid as
     * [[dimStats]]. |val| < 0.6 on this corpus, so grid values < 2^30 and any
     * pairwise product fits a long exactly. */
@@ -959,8 +963,7 @@ object SimilarityPack {
       r.getSeq[Long](r.fieldIndex("cv")), r.getAs[Double]("cnrm")))
       .sortBy(_._1)
 
-  /** The centroids of the committed tuned or IVF-PQ artifact at `p`,
-    * harvested once per commit ([[graft.sim.IndexStore.memberRows]]). */
+  /** The tuned artifact's centroids at `p`, harvested once per commit. */
   private[graft] def tunedCentroidsAt(s: SparkSession, p: String)
       : Seq[TunedCell] =
     tunedCells(graft.sim.IndexStore.memberRows(s, p, "centroids"))
@@ -1260,14 +1263,16 @@ object SimilarityPack {
     pqRank(cent, codes, vecs, shortlist, qs)
   }
 
+  /** Build constants of [[ensurePqIndex]]. */
+  private[graft] val PqIndexParams =
+    s"sub=$PqSubspaces,codes=$PqCodes,iters=$PqIters,cap=$KMeansTrainCap"
+
   /** Persisted PQ index: codebooks, codes AND the grid vectors (the
     * re-rank member — Annoy-style, so serving never re-joins the corpus). */
   private[graft] def ensurePqIndex(s: SparkSession, d: String): String =
     graft.sim.IndexStore.ensure(s, d,
       s"angular_pq_${PqSubspaces}x${PqCodes}t$PqIters",
-      Tables.embeddings(s, d), "vec_id",
-      s"sub=$PqSubspaces,codes=$PqCodes,iters=$PqIters," +
-        s"cap=$KMeansTrainCap") { p =>
+      Tables.embeddings(s, d), "vec_id", PqIndexParams) { p =>
       val vecs = gridVecs(s, d)
       val (cent, codes) = pqTrain(vecs)
       cent.write.mode("overwrite").parquet(s"$p/codebooks")
@@ -1482,12 +1487,14 @@ object SimilarityPack {
   // (TPAMI 2011), the structure FAISS serves billion-vector corpora with
   // and the memory-AND-compute analogue of the reference's Annoy forest
   // (similarity/index_model.py:54-74), which prunes via trees but stores
-  // full vectors. Codes here are plain (non-residual) PQ over the SAME
-  // global codebooks as `ann_pq_adc` — residual encoding buys recall on
-  // clustered corpora but would duplicate the training chains in the
-  // unrolled oracle for no measurable recall gain on this corpus (the
-  // gaussian synthetic data has no cluster structure for residuals to
-  // exploit; measured equal recall@10 at sf0.01).
+  // full vectors. Codes here are plain (non-residual) PQ, the PQ family's
+  // own codes, and the cells are the tuned family's: the persisted form
+  // is their CHILD, reading the tuned centroids and assignment and the PQ
+  // codebooks, and storing only the cell-carrying codes. Residual
+  // encoding buys recall on clustered corpora but would duplicate the
+  // training chains in the unrolled oracle for no measurable recall gain
+  // on this corpus (the gaussian synthetic data has no cluster structure
+  // for residuals to exploit; measured equal recall@10 at sf0.01).
   //
   // Serving cost per query: K centroid dots (probe) + |probed cells| ADC
   // code scans + [[IvfPqShortlist]] exact re-ranks — never a corpus scan
@@ -1506,16 +1513,18 @@ object SimilarityPack {
       qs: QuerySet = DefaultQueries): DataFrame = {
     val (cents, assign) = ivfTunedTrain(s, d)
     val (pqCent, codes) = pqTrain(assign)
-    ivfPqRank(cents, assign,
-      pqCent.withColumnRenamed("cell", "code"),
-      codes.withColumnRenamed("cell", "code")
-        .join(assign.select(col("vec_id"), col("cell")), Seq("vec_id")), qs)
+    ivfPqRank(cents, assign, pqCent, cellCodes(codes, assign), qs)
   }
+
+  /** PQ codes (vec_id, s, code) with their IVF `cell` from `assign`. */
+  private def cellCodes(codes: DataFrame, assign: DataFrame): DataFrame =
+    codes.withColumnRenamed("cell", "code")
+      .join(assign.select(col("vec_id"), col("cell")), Seq("vec_id"))
 
   /** IVF-PQ top-10 from trained parts: harvested coarse centroids,
     * (vec_id, iv, nrm, cell) assignment (vectors + their IVF cell — the
-    * re-rank member), (s, code, pos, civ) sub-codebooks and (vec_id, s,
-    * code, cell) PQ codes CARRYING their IVF cell. Queries probe their
+    * re-rank member), (s, cell, pos, civ) PQ sub-codebooks and
+    * [[cellCodes]] — PQ codes CARRYING their IVF cell. Queries probe their
     * [[IvfTunedProbe]] nearest cells, ADC-score ONLY the probed cells'
     * codes through the per-query LUT, shortlist [[IvfPqShortlist]],
     * exact-cosine re-rank. The LUT, probe and shortlist frames are all
@@ -1530,12 +1539,13 @@ object SimilarityPack {
       .select(col("vec_id").as("query_id"), col("iv").as("qiv"),
         col("nrm").as("qnrm"))
       .select(col("query_id"), tunedProbe(cents))
-    val cn = pqCent.groupBy(col("s"), col("code"))
+    val cn = pqCent.groupBy(col("s"), col("cell").as("code"))
       .agg(sum(col("civ") * col("civ")).as("cc"))
     // restrict BEFORE exploding: only the query rows pay the subspace
     // explode (the query set's filter then reaches the scan directly)
     val lut = pqExplode(qs(assign)).join(broadcast(pqCent), Seq("s", "pos"))
-      .groupBy(col("vec_id").as("query_id"), col("s"), col("code"))
+      .groupBy(col("vec_id").as("query_id"), col("s"),
+        col("cell").as("code"))
       .agg(sum(col("giv") * col("civ")).as("qdot"))
     val wShort = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id"))
@@ -1557,45 +1567,36 @@ object SimilarityPack {
     exactRerank(short, assign.select("vec_id", "iv", "nrm"), qs)
   }
 
-  /** Persisted IVF-PQ index: coarse centroids, PQ codebooks, per-vector
-    * codes WITH their IVF cell, and the (vector, cell) assignment —
-    * everything serving needs, nothing else. The cell rides each codes
-    * row precisely so the serve path never joins the corpus-sized codes
-    * and assignments members: the probe filter applies directly to the
-    * codes scan. At deployment scale the same member is laid out
-    * (partitioned/bucketed) by cell, upgrading that filter to file-level
-    * pruning. */
+  /** Persisted IVF-PQ index, a child of the tuned and PQ artifacts: its
+    * build ensures both and stores only [[cellCodes]] of their codes and
+    * assignment. Its params are its parents' plus members=v2, so a parent
+    * constant change makes it stale. The cell rides each codes row so the
+    * serve path never joins the corpus-sized codes and assignments
+    * members: the probe filter applies directly to the codes scan. At
+    * deployment scale the same member is laid out (partitioned/bucketed)
+    * by cell, upgrading that filter to file-level pruning. */
   private[graft] def ensureIvfPqIndex(s: SparkSession, d: String): String =
     graft.sim.IndexStore.ensure(s, d,
       s"angular_ivfpq_${IvfTunedCells}x${PqSubspaces}x${PqCodes}" +
         s"p${IvfTunedProbe}l$IvfPqShortlist",
       Tables.embeddings(s, d), "vec_id",
-      s"cells=$IvfTunedCells,iters=$IvfTunedIters,sub=$PqSubspaces," +
-        s"codes=$PqCodes,pqiters=$PqIters,cap=$KMeansTrainCap") { p =>
-      import s.implicits._
-      val (cents, assign) = ivfTunedTrain(s, d)
-      val (pqCent, codes) = pqTrain(assign)
-      cents.toDF("cell", "cv", "cnrm").write.mode("overwrite")
-        .parquet(s"$p/centroids")
-      assign.select("vec_id", "iv", "nrm", "cell").write.mode("overwrite")
-        .parquet(s"$p/assignments")
-      pqCent.withColumnRenamed("cell", "code").write.mode("overwrite")
-        .parquet(s"$p/codebooks")
-      codes.withColumnRenamed("cell", "code")
-        .join(assign.select(col("vec_id"), col("cell")), Seq("vec_id"))
+      s"$TunedIndexParams;$PqIndexParams;members=v2") { p =>
+      cellCodes(member(s, ensurePqIndex(s, d), "codes"),
+        member(s, ensureTunedIndex(s, d), "assignments"))
         .write.mode("overwrite").parquet(s"$p/codes")
     }
 
-  /** IVF-PQ served from the saved artifact alone — no training and no
+  /** IVF-PQ served from the saved artifacts alone — no training and no
     * corpus scan in the query path (plan-asserted in IndexStoreSpec).
+    * Centroids (the tuned harvest memo) and assignment come from the
+    * tuned parent, codebooks from the PQ parent; parents resolve first.
     * Identical results to [[ivfPqTopk]] by construction (shared oracle). */
   private def ivfPqServe(s: SparkSession, d: String,
       qs: QuerySet = DefaultQueries): DataFrame = {
-    val p = ensureIvfPqIndex(s, d)
-    ivfPqRank(tunedCentroidsAt(s, p),
-      member(s, p, "assignments"),
-      member(s, p, "codebooks"),
-      member(s, p, "codes"), qs)
+    val (t, q) = (ensureTunedIndex(s, d), ensurePqIndex(s, d))
+    ivfPqRank(tunedCentroidsAt(s, t), member(s, t, "assignments"),
+      member(s, q, "codebooks"),
+      member(s, ensureIvfPqIndex(s, d), "codes"), qs)
   }
 
   /** Persisted tuned-IVF index: the six Lloyd iterations are the expensive
@@ -1607,9 +1608,7 @@ object SimilarityPack {
   private[graft] def ensureTunedIndex(s: SparkSession, d: String): String =
     graft.sim.IndexStore.ensure(s, d,
       s"angular_ivf_tuned_${IvfTunedCells}x${IvfTunedIters}p$IvfTunedProbe",
-      Tables.embeddings(s, d), "vec_id",
-      s"cells=$IvfTunedCells,iters=$IvfTunedIters,cap=$KMeansTrainCap") {
-      p =>
+      Tables.embeddings(s, d), "vec_id", TunedIndexParams) { p =>
       import s.implicits._
       val (cents, assign) = ivfTunedTrain(s, d)
       cents.toDF("cell", "cv", "cnrm").write.mode("overwrite")

@@ -189,8 +189,8 @@ object TextPack {
           (col("c1v").cast(DoubleType) / col("n").cast(DoubleType)))
     tf2
       .join(lm2, Seq("u", "v"))
-      .join(lm1.select(col("tk").as("u"), col("c1").as("c1u")), Seq("u"))
-      .join(lm1.select(col("tk").as("v"), col("c1").as("c1v")), Seq("v"))
+      .join(lm1.select(col("tk").as("u"), col("c").as("c1u")), Seq("u"))
+      .join(lm1.select(col("tk").as("v"), col("c").as("c1v")), Seq("v"))
       .crossJoin(broadcast(total))
       .groupBy(col("doc_id"))
       .agg(sum(col("tf2")).as("n_bigrams"),
@@ -244,9 +244,9 @@ object TextPack {
       else lm2
     tf2
       .join(lm2b, Seq("u", "v"), "left")
-      .join(lm1.select(col("tk").as("u"), col("c1").as("c1u")),
+      .join(lm1.select(col("tk").as("u"), col("c").as("c1u")),
         Seq("u"), "left")
-      .join(lm1.select(col("tk").as("v"), col("c1").as("c1v")),
+      .join(lm1.select(col("tk").as("v"), col("c").as("c1v")),
         Seq("v"), "left")
       .crossJoin(broadcast(total)) // total carries BOTH n and vsz
       .groupBy(col("doc_id"))
@@ -261,41 +261,42 @@ object TextPack {
   /** Score an arbitrary (doc_id, text) batch against the frozen bigram
     * artifact with the smoothed core — shared by the
     * `tx_bigram_ppl_smoothed` batch entry and the streaming gate
-    * (DocStream.bigramPplGate). */
-  private[graft] def bigramServeSmoothedAt(s: SparkSession, p: String,
-      docs: org.apache.spark.sql.DataFrame,
+    * (DocStream.bigramPplGate). `at` is [[bigramLmAt]]'s pair: bigram
+    * counts and the frozen (N, V) from the child's `lm2` and one-row
+    * `total`, so no call re-aggregates a member to recompute a constant,
+    * and unigram counts from the parent's `lm`. */
+  private[graft] def bigramServeSmoothedAt(s: SparkSession,
+      at: (String, String), docs: org.apache.spark.sql.DataFrame,
       prefilter: Boolean = true): org.apache.spark.sql.DataFrame =
-    // the frozen constants (N, V) ride in the one-row total member —
-    // re-aggregating lm1 per call would be a full member scan per
-    // micro-batch just to recompute a constant
     bigramScoreSmoothed(bigramTf(docs),
-      member(s, p, "lm2"), member(s, p, "lm1"),
-      member(s, p, "total"), prefilter)
+      member(s, at._1, "lm2"), member(s, at._2, "lm"),
+      member(s, at._1, "total"), prefilter)
 
-  /** Build constants of [[ensureBigramLmIndex]] — members=v2: the total
-    * member carries (n, vsz) so serving never re-derives the vocabulary
-    * size (a params change rebuilds stale v1 artifacts). */
+  /** Build constants of [[ensureBigramLmIndex]]: its parent's (so their
+    * change makes it stale), members=v3 for the `lm2` + `total` layout. */
   private[graft] val BigramLmIndexParams =
-    s"tokenizer=ws_v1,lambda=$BigramLambda,members=v2"
+    s"$LmIndexParams,lambda=$BigramLambda,members=v3"
 
-  /** Persisted corpus bigram LM: (u, v, c2) + (tk, c1) + one-row total —
-    * [[ensureLmIndex]]'s posture one order up; every scoring job reads
-    * the count members, never the corpus. */
+  /** Persisted corpus bigram LM, a child of [[ensureLmIndex]]: (u, v, c2)
+    * counts plus a one-row (n, vsz) total of the parent's `lm` member.
+    * Scoring reads these and the parent's counts, never the corpus. */
   private[graft] def ensureBigramLmIndex(s: SparkSession, d: String): String =
     graft.sim.IndexStore.ensure(s, d, "bigram_lm",
       Tables.documents(s, d).select(col("doc_id"), col("text")), "doc_id",
       BigramLmIndexParams) { p =>
-      val docs = Tables.documents(s, d)
-      docBigrams(docs).groupBy(col("u"), col("v"))
+      docBigrams(Tables.documents(s, d)).groupBy(col("u"), col("v"))
         .agg(count(lit(1)).as("c2"))
         .write.mode("overwrite").parquet(s"$p/lm2")
-      val lm1 = docs.select(explode(tokens(col("text"))).as("tk"))
-        .groupBy(col("tk")).agg(count(lit(1)).as("c1"))
-      lm1.write.mode("overwrite").parquet(s"$p/lm1")
       // NOT "v": the bigram frame has a `v` (second token) column
-      lm1.agg(sum(col("c1")).as("n"), count(lit(1)).as("vsz")).coalesce(1)
+      member(s, ensureLmIndex(s, d), "lm")
+        .agg(sum(col("c")).as("n"), count(lit(1)).as("vsz")).coalesce(1)
         .write.mode("overwrite").parquet(s"$p/total")
     }
+
+  /** (bigram LM, unigram LM) artifact paths through the child's gate: a
+    * fresh child was built after its parent passed the same corpus stamp. */
+  private[graft] def bigramLmAt(s: SparkSession, d: String): (String, String) =
+    (ensureBigramLmIndex(s, d), graft.sim.IndexStore.path(d, "unigram_lm"))
 
   /** Persisted corpus unigram LM: the (token, count) member plus the
     * one-row total — the text-side build-once/serve-many artifact (the
@@ -1056,7 +1057,7 @@ object TextPack {
       val toks = docs.select(explode(tokens(col("text"))).as("tk"))
       bigramScore(bigramTf(docs),
         big.groupBy(col("u"), col("v")).agg(count(lit(1)).as("c2")),
-        toks.groupBy(col("tk")).agg(count(lit(1)).as("c1")),
+        toks.groupBy(col("tk")).agg(count(lit(1)).as("c")),
         toks.agg(count(lit(1)).as("n")))
         .orderBy("doc_id")
     }),
@@ -1069,17 +1070,16 @@ object TextPack {
     // inline entry by construction (shared bigramScore core over the
     // same exact counts) — the row-identity oracle's contract. ----------
     "tx_bigram_ppl_indexed" -> ((s, d) => {
-      val p = ensureBigramLmIndex(s, d)
+      val (p, lm) = bigramLmAt(s, d)
       bigramScore(bigramTf(Tables.documents(s, d)),
-        member(s, p, "lm2"), member(s, p, "lm1"),
-        member(s, p, "total"))
+        member(s, p, "lm2"), member(s, lm, "lm"), member(s, p, "total"))
         .orderBy("doc_id")
     }),
 
     // ---- smoothed post-freeze bigram scoring (the streaming bigram
     //      gate's batch twin — see bigramScoreSmoothed) ------------------
     "tx_bigram_ppl_smoothed" -> ((s, d) =>
-      bigramServeSmoothedAt(s, ensureBigramLmIndex(s, d),
+      bigramServeSmoothedAt(s, bigramLmAt(s, d),
         Tables.documents(s, d), prefilter = false).orderBy("doc_id")),
 
     // ---- add-one-smoothed scoring from the persisted LM ------------------

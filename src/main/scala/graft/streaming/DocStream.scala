@@ -250,13 +250,13 @@ object DocStream {
     * ([[graft.operators.TextPack.bigramServeSmoothedAt]] — Laplace
     * unigram backoff + context-guarded bigram term, so post-freeze
     * vocabulary still scores). The unigram `pplGate`'s posture one order
-    * up; artifact resolved once at gate construction, each batch pays
+    * up; both artifacts resolve once at gate construction, each batch pays
     * its own bigram counts plus count-table-sized joins. Batch twin:
     * `tx_bigram_ppl_smoothed` (parity by shared core, pinned in
     * StreamingSpec incl. the all-unseen batch). */
   def bigramPplGate(spark: SparkSession, dir: String): DataFrame => DataFrame = {
-    val p = graft.operators.TextPack.ensureBigramLmIndex(spark, dir)
-    batch => graft.operators.TextPack.bigramServeSmoothedAt(spark, p, batch)
+    val at = graft.operators.TextPack.bigramLmAt(spark, dir)
+    batch => graft.operators.TextPack.bigramServeSmoothedAt(spark, at, batch)
   }
 
   /** Keyword-extraction gate at ingest: rank one arriving micro-batch's

@@ -62,10 +62,11 @@ class IndexStoreSpec extends SparkSpec {
     val vq = planOf("ann_ivfpq_indexed")
     assert(vq.contains("graft_indexes") && vq.contains("angular_ivfpq"),
       s"ivfpq plan should scan the saved index:\n$vq")
-    // no training and no corpus scan in the serve path: the artifact
-    // carries centroids, codebooks, codes AND vectors. (The query-side
-    // LUT legitimately explodes the 10 query vectors — same as pq — so a
-    // blanket no-posexplode assert would be wrong here.)
+    // no training and no corpus scan in the serve path: the ivfpq
+    // artifact carries the cell-carrying codes, and the centroids,
+    // vectors and codebooks come from its tuned and pq parents. (The
+    // query-side LUT legitimately explodes the 10 query vectors — same as
+    // pq — so a blanket no-posexplode assert would be wrong here.)
     assert(!vq.contains("embeddings"),
       s"ivfpq plan re-joins the corpus:\n$vq")
   }
@@ -681,6 +682,72 @@ class IndexStoreSpec extends SparkSpec {
       }.map(_._1)
       assert(builders.isEmpty, "queries that built an artifact after " +
         s"prepare: ${builders.mkString(", ")}")
+    } finally {
+      fs.delete(root, true)
+      org.apache.commons.io.FileUtils.deleteDirectory(copy.toFile)
+    }
+  }
+
+  test("registry shape: every named parent is a family that names no " +
+    "parent, so prepare's two waves suffice") {
+    val byName = SparkEntry.artifacts.map(f => f.name -> f).toMap
+    assert(byName.size == SparkEntry.artifacts.size, "duplicate family name")
+    val children = SparkEntry.artifacts.filter(_.parents.nonEmpty)
+    assert(children.map(_.name).toSet == Set("ivfpq", "bigram_lm"))
+    for (f <- children; p <- f.parents)
+      assert(byName.get(p).exists(_.parents.isEmpty),
+        s"${f.name} names $p, which is not a family without parents")
+  }
+
+  test("child artifacts follow their parents: after the corpus shrinks, " +
+    "served IVF-PQ and bigram rows equal the inline rows") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    import operators.{SimilarityPack, TextPack}
+    // a fresh copy of sfTiny, so its artifacts and layouts are its own
+    val copy = Files.createTempDirectory("graft_lineage")
+    val files = Files.list(Paths.get(sfTiny))
+    try files.forEach(f => Files.copy(f, copy.resolve(f.getFileName)))
+    finally files.close()
+    val d = copy.toString
+    val root = new org.apache.hadoop.fs.Path(IndexStore.path(d, "x")).getParent
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ids = Seq(3L, 17L, 42L).toDF("vec_id")
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+    def served(): Unit = {
+      val vq = rows(SimilarityPack.ivfPqTopkFor(spark, d, ids))
+      assert(vq.nonEmpty && vq == rows(SimilarityPack.ivfPqTopk(spark, d,
+        SimilarityPack.querySetOf(ids))), "ivfpq served != inline")
+      val lm = rows(SparkEntry.queries("tx_bigram_ppl_indexed")(spark, d))
+      assert(lm.nonEmpty &&
+        lm == rows(SparkEntry.queries("tx_bigram_ppl")(spark, d)),
+        "bigram served != inline")
+    }
+    // replace the copy's embeddings and documents with the source rows
+    // whose key passes `keep`, and drop their layouts and session memos
+    def shrink(keep: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
+        : Unit = {
+      for ((t, k) <- Seq("embeddings" -> "vec_id", "documents" -> "doc_id")) {
+        Tables.table(spark, sfTiny, t).filter(keep(col(k)))
+          .write.mode("overwrite").parquet(s"$d/$t.parquet")
+        spark.sql(s"DROP TABLE IF EXISTS ${Tables.ident(d, t)}")
+      }
+      IndexStore.resetFingerprintMemo()
+    }
+    try {
+      // parents first, as SparkEntry.prepare's waves build them
+      SimilarityPack.ensureTunedIndex(spark, d)
+      SimilarityPack.ensurePqIndex(spark, d)
+      TextPack.ensureLmIndex(spark, d)
+      served()
+      shrink(k => k % 5 =!= 4)
+      served() // serving meets all five artifacts stale
+      shrink(k => k % 5 =!= 4 && k % 7 =!= 6)
+      // a child ensured before its parents must rebuild them first
+      SimilarityPack.ensureIvfPqIndex(spark, d)
+      TextPack.ensureBigramLmIndex(spark, d)
+      served()
     } finally {
       fs.delete(root, true)
       org.apache.commons.io.FileUtils.deleteDirectory(copy.toFile)
